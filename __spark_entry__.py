@@ -89,6 +89,13 @@ def _path_bytes(path: str) -> int:
     return 0
 
 
+def _max_partition_bytes(spark: SparkSession) -> int:
+    """spark.sql.files.maxPartitionBytes in bytes, read through the
+    session's own byte-string conf: "128m", "64MB" and "1g" mean what they
+    mean to the scan's split planning."""
+    return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+
+
 def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Small-scan parallelization (guide §2.5/§6.1, r06): a parquet table
     smaller than one input split (spark.sql.files.maxPartitionBytes,
@@ -115,12 +122,8 @@ def _spread(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     size = _path_bytes(path)
     if size < _SPREAD_FLOOR_BYTES:
         return df
-    try:
-        mpb = int(str(spark.conf.get("spark.sql.files.maxPartitionBytes")).rstrip("b"))
-    except (TypeError, ValueError):
-        mpb = 128 << 20
     par = spark.sparkContext.defaultParallelism
-    if size // mpb >= par:
+    if size // _max_partition_bytes(spark) >= par:
         return df
     return df.repartition(par)
 

@@ -147,3 +147,44 @@ def test_respect_nofollow_equivalent_on_directive_free_corpus(
     assert sorted(map(tuple, base.select(*cols).collect())) == sorted(
         map(tuple, gated.select(*cols).collect())
     )
+
+
+def test_bloom_increment_failure_after_commit(
+    spark, crawl_sf0001, tmp_path_factory, monkeypatch
+):
+    """A bloom increment that fails after its round committed must not fail
+    the round (a retry would commit it twice): the round returns, the next
+    round rebuilds the bloom from the ledger, and the crawl is unchanged."""
+    import json
+
+    from xrpl_rich_list_py_crawler_spark.operators import seen
+
+    real = seen.build_bloom_shards
+
+    def flaky(*args, **kwargs):
+        if kwargs.get("n_bits_override") is not None:
+            raise RuntimeError("injected bloom increment failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(seen, "build_bloom_shards", flaky)
+    cat = SnapshotCatalog(str(tmp_path_factory.mktemp("catalog_bloom_fault")))
+    pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
+    robots = spark.read.parquet(os.path.join(crawl_sf0001, "robots.parquet"))
+    seeds = spark.read.parquet(os.path.join(crawl_sf0001, "seeds.parquet"))
+    run = CrawlRun(spark, cat, pages, robots, use_bloom=True)
+    assert run.run(2, seeds) == 2
+    assert run._bloom is None
+
+    m = cat.manifest()
+    assert m["committed_rounds"] == [0, 1, 2]
+    # round 0 (bootstrap) commits only the seed frontier and an empty seen
+    assert {t: v["rounds"] for t, v in m["tables"].items()} == {
+        "frontier": [0, 1, 2], "seen": [0, 1, 2],
+        "results": [1, 2], "metrics": [1, 2],
+    }
+    gdir = os.path.join(os.path.dirname(__file__), "goldens")
+    for rn in (1, 2):
+        with open(os.path.join(gdir, f"crawl_order_round{rn}.jsonl")) as f:
+            want = [json.loads(line)["url"] for line in f]
+        got = cat.read_round(spark, "results", rn).orderBy("rank").select("url")
+        assert [r["url"] for r in got.collect()] == want

@@ -152,3 +152,134 @@ def test_analyze_tables_empty_dict(spark):
     out = jobs.analyze_tables(spark, {})
     assert out.columns == ["table", "rows"]
     assert out.count() == 0
+
+
+# -- label churn on a hand-built summary -------------------------------------
+
+L = dt.datetime(2026, 1, 3)
+H = dt.timedelta(hours=1)
+#: the summary_series schema at the committed fixtures
+SUMMARY_DDL = (
+    "grouped_label string, count bigint, total_balance decimal(30,6), "
+    "total_escrow decimal(30,6), total_xrp decimal(31,6), "
+    "created_at timestamp_ntz"
+)
+
+
+def _row(label, ts, xrp, count=1):
+    from decimal import Decimal
+
+    bal, esc = Decimal(xrp) - 1, Decimal(1)
+    return (label, count, bal, esc, bal + esc, ts)
+
+
+@pytest.fixture(scope="module")
+def churn(spark):
+    """Snapshots at L, L-1h, L-3h and L-24h (none far enough back for
+    168h/720h). Stay lives throughout and is 0 at L-3h, Gone and Old leave
+    before L, New arrives at L."""
+    rows = [
+        _row("Stay", L, 101, count=2), _row("Stay", L - H, 50),
+        _row("Stay", L - 3 * H, 0), _row("Stay", L - 24 * H, 80),
+        _row("Gone", L - H, 7), _row("Gone", L - 3 * H, 7),
+        _row("Old", L - H, 3),
+        _row("New", L, 9),
+    ]
+    summary = spark.createDataFrame(rows, SUMMARY_DDL)
+    cats = spark.createDataFrame(
+        [("Stay", "Exchange", "US"), ("Gone", "Exchange", "US"),
+         ("Old", "Fund", "DE"), ("New", "Whale", "JP")],
+        "grouped_label string, category string, country string",
+    )
+    return summary, cats
+
+
+def _changes_by_key(df):
+    return {
+        (r["grouped_label"], r["hours"]):
+            (float(r["balance_change"]), r["percentage_change"])
+        for r in df.collect()
+    }
+
+
+#: horizons without history (or with an unchanged value) read 0 / 0
+_FLAT = {h: (0.0, 0.0) for h in jobs.HORIZONS}
+
+
+def test_balance_changes_label_churn(churn):
+    """A label absent at latest gets no row; a label new at latest reads
+    0 / 0 at every horizon; missing targets (168h, 720h) coalesce to
+    current; a zero previous value takes the div-by-zero guard."""
+    summary, _ = churn
+    got = _changes_by_key(jobs.balance_changes(summary))
+    want = {("New", h): v for h, v in _FLAT.items()}
+    want.update({("Stay", h): v for h, v in _FLAT.items()})
+    want[("Stay", 1)] = (51.0, 102.0)
+    want[("Stay", 3)] = (101.0, 0.0)
+    want[("Stay", 24)] = (21.0, 26.25)
+    assert got == want
+
+
+def test_category_changes_label_churn(churn):
+    """Exchange sums Stay and Gone at each lookback but only Stay at
+    latest; Fund exists only in the past and gets no row; Whale is new."""
+    summary, cats = churn
+    ch = jobs.category_changes(summary, cats)
+    got = _changes_by_key(ch)
+    want = {("Whale", h): v for h, v in _FLAT.items()}
+    want.update({("Exchange", h): v for h, v in _FLAT.items()})
+    want[("Exchange", 1)] = (44.0, 77.192982)
+    want[("Exchange", 3)] = (94.0, 1342.857143)
+    want[("Exchange", 24)] = (21.0, 26.25)
+    assert got == want
+    totals = {
+        (r["grouped_label"], r["count"], float(r["total_balance"]),
+         float(r["total_escrow"]), float(r["total_xrp"]))
+        for r in ch.collect()
+    }
+    assert totals == {("Exchange", 2, 100.0, 1.0, 101.0),
+                      ("Whale", 1, 8.0, 1.0, 9.0)}
+
+
+def test_changes_output_schema(churn):
+    """Names and types of the change tables over the summary_series schema:
+    the Parquet tables written from them, and their readers, depend on
+    these."""
+    summary, cats = churn
+
+    def schema(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    assert schema(jobs.balance_changes(summary)) == [
+        ("grouped_label", "string"), ("hours", "int"),
+        ("balance_change", "decimal(32,6)"), ("percentage_change", "double"),
+        ("calculated_at", "timestamp"),
+    ]
+    assert schema(jobs.category_changes(summary, cats)) == [
+        ("grouped_label", "string"), ("hours", "int"), ("count", "bigint"),
+        ("total_balance", "decimal(38,6)"), ("total_escrow", "decimal(38,6)"),
+        ("total_xrp", "decimal(38,6)"), ("balance_change", "decimal(38,6)"),
+        ("percentage_change", "double"), ("calculated_at", "timestamp"),
+    ]
+
+
+def test_refresh_resolves_lookback_once(spark, rich, cats, monkeypatch):
+    """One refresh resolves the lookback timestamps once and hands them to
+    all four change tables; the alert leaves no cached data behind."""
+    from xrpl_rich_list_py_crawler_spark.plans import pipeline
+
+    calls = []
+    real = jobs._lookback_targets
+
+    def counted(summary):
+        calls.append(1)
+        return real(summary)
+
+    monkeypatch.setattr(jobs, "_lookback_targets", counted)
+    res = pipeline.refresh_analytics(spark, rich, cats)
+    assert len(calls) == 1
+    res.summary.unpersist()
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    pipeline.significant_changes_alert(spark, rich, 0.05, 100, 1767225600)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted

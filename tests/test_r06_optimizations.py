@@ -124,6 +124,22 @@ def test_spread_is_noop_for_large_scans(spark, tmp_path):
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
 
+def test_max_partition_bytes_reads_size_suffixes(spark):
+    """ADVICE: the split size is a byte string; suffixed and upper-case
+    values must read as bytes, not fall back to a default."""
+    import __spark_entry__ as entry
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        for value, want in (("128m", 128 << 20), ("64MB", 64 << 20),
+                            ("1g", 1 << 30), ("512k", 512 << 10),
+                            ("1048576", 1 << 20)):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", value)
+            assert entry._max_partition_bytes(spark) == want, value
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
 def test_spread_floor_skips_tiny_dims(spark, tmp_path):
     import __spark_entry__ as entry
 

@@ -7,12 +7,14 @@ Determinism discipline (F12, ``SURVEY.md §7.4``): nothing here calls
 created_at*, so reruns are idempotent and DuckDB oracles can reproduce
 values exactly.
 
-Scale notes: the summary table is small relative to snapshots (one row per
-(label, hour)), so the lookback-timestamp resolution — a handful of scalar
-subqueries in the reference — is done once on the collected *distinct
-timestamp list* (≤ retention-window hours rows, e.g. 17.5k at 730 days),
-then all five horizons are resolved with ONE broadcast join instead of five
-correlated lookups.
+Scale notes: these are small queries, bound by Spark's per-job and
+per-stage cost rather than by rows. The lookback-timestamp resolution — a
+handful of scalar subqueries per procedure in the reference — is two
+one-row aggregate jobs (:func:`_lookback_targets`), which a refresh runs
+once and hands to all four change tables. Each change table is then ONE
+aggregation over the summary rows at the latest and the ≤5 lookback
+timestamps, a conditional aggregate per timestamp, whose one row per label
+or dimension value explodes into the five horizon rows.
 """
 
 from __future__ import annotations
@@ -26,6 +28,9 @@ from ..functions.udfs import canonical_label_col, safe_ratio_col
 from ..operators.asof import latest_per_key
 
 HORIZONS = [1, 3, 24, 168, 720]
+
+#: ``(latest, {horizon: target timestamp or None})`` of a summary
+Lookback = tuple[_dt.datetime | None, dict[int, _dt.datetime | None]]
 
 
 def _dec(col: str):
@@ -90,7 +95,7 @@ def summary_series(richlist: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _lookback_targets(summary: DataFrame) -> tuple[_dt.datetime, dict[int, _dt.datetime | None]]:
+def _lookback_targets(summary: DataFrame) -> Lookback:
     """Resolve the five global lookback timestamps.
 
     The reference's subqueries correlate only on the latest ``created_at``
@@ -123,56 +128,82 @@ def _lookback_targets(summary: DataFrame) -> tuple[_dt.datetime, dict[int, _dt.d
     return latest, targets
 
 
-def _changes(summary: DataFrame, value_col: str) -> DataFrame:
-    """Shared engine for balance/available changes: one broadcast join of
-    (current × 5 horizons) against the summary at the five target
-    timestamps, COALESCE-to-current for missing history (F9), div-by-zero
-    guard (F8)."""
-    spark = summary.sparkSession
-    latest, targets = _lookback_targets(summary)
-    if latest is None:
-        return spark.createDataFrame(
-            [],
-            "grouped_label string, hours int, balance_change double, "
-            "percentage_change double, calculated_at timestamp",
+def _horizon_changes(rows: DataFrame, key, agg, cols: list[str], cur: str,
+                     latest, targets) -> DataFrame:
+    """Shared engine of the four change tables, one pass over ``rows``.
+
+    ONE aggregation by ``key`` over the rows at ``latest`` or a lookback
+    target: ``agg`` of each of ``cols`` at ``latest``, and of ``cur`` at
+    each horizon's target. Keys without a row at ``latest`` drop out. Five
+    (hours, prev_raw) structs then explode each key into its horizon rows,
+    which diff current ``cur`` against prev_raw with COALESCE-to-current
+    for missing history (F9) and the div-by-zero guard (F8).
+    """
+    ts = F.col("created_at")
+    now = ts == F.lit(latest)
+    stamps = [latest, *{t for t in targets.values() if t is not None}]
+    wide = (
+        rows.filter(ts.isin(*stamps))
+        .groupBy(key.alias("grouped_label"))
+        .agg(
+            F.max(now).alias("_now"),
+            *[agg(F.when(now, F.col(c))).alias(c) for c in cols],
+            *[agg(F.when(ts == F.lit(t), F.col(cur))).alias(f"_prev{h}")
+              for h, t in targets.items() if t is not None],
         )
-    horizon_df = spark.createDataFrame(
-        [(h, targets[h]) for h in HORIZONS], "hours int, target_ts timestamp"
+        .filter("_now")
     )
-    current = summary.filter(F.col("created_at") == F.lit(latest)).select(
-        "grouped_label", F.col(value_col).alias("cur")
-    )
-    hist = summary.select(
-        "grouped_label", "created_at", F.col(value_col).alias("prev_raw")
-    )
-    fanned = current.crossJoin(F.broadcast(horizon_df))
-    joined = fanned.join(
-        hist,
-        (fanned["grouped_label"] == hist["grouped_label"])
-        & (fanned["target_ts"] == hist["created_at"]),
-        "left",
-    ).select(fanned["grouped_label"], "hours", "cur", "prev_raw")
-    prev = F.coalesce(F.col("prev_raw"), F.col("cur"))
-    curd, prevd = F.col("cur").cast("double"), prev.cast("double")
-    return joined.select(
+    null = F.lit(None).cast(wide.schema[cur].dataType)
+    horizons = F.array(*[
+        F.struct(
+            F.lit(h).alias("hours"),
+            (null if targets[h] is None else F.col(f"_prev{h}")).alias("prev_raw"),
+        )
+        for h in HORIZONS
+    ])
+    prev = F.coalesce(F.col("_h.prev_raw"), F.col(cur))
+    curd, prevd = F.col(cur).cast("double"), prev.cast("double")
+    return wide.withColumn("_h", F.explode(horizons)).select(
         "grouped_label",
-        "hours",
-        (F.col("cur") - prev).alias("balance_change"),
+        F.col("_h.hours").alias("hours"),
+        *cols,
+        (F.col(cur) - prev).alias("balance_change"),
         F.round(safe_ratio_col(curd, prevd), 6).alias("percentage_change"),
         F.lit(latest).alias("calculated_at"),
     )
 
 
-def balance_changes(summary: DataFrame) -> DataFrame:
+def _changes(summary: DataFrame, value_col: str,
+             lookback: Lookback | None = None) -> DataFrame:
+    """Balance/available changes per label: :func:`_horizon_changes` with a
+    conditional max, as a label has one summary row per timestamp."""
+    latest, targets = lookback or _lookback_targets(summary)
+    if latest is None:
+        return summary.sparkSession.createDataFrame(
+            [],
+            "grouped_label string, hours int, balance_change double, "
+            "percentage_change double, calculated_at timestamp",
+        )
+    return _horizon_changes(
+        summary, F.col("grouped_label"), F.max, [value_col], value_col,
+        latest, targets,
+    ).drop(value_col)
+
+
+def balance_changes(summary: DataFrame,
+                    lookback: Lookback | None = None) -> DataFrame:
     """≅ ``update_balance_changes`` (``function.sql:97-249``): total_xrp
-    deltas at 5 horizons, banded 1h, unpivoted to (label, hours) rows."""
-    return _changes(summary, "total_xrp")
+    deltas at 5 horizons, banded 1h, unpivoted to (label, hours) rows.
+    ``lookback`` is ``_lookback_targets(summary)`` when the caller has it
+    already."""
+    return _changes(summary, "total_xrp", lookback)
 
 
-def available_changes(summary: DataFrame) -> DataFrame:
+def available_changes(summary: DataFrame,
+                      lookback: Lookback | None = None) -> DataFrame:
     """≅ ``update_available_changes`` (``function.sql:252-404``): same over
     escrow-free ``total_balance``."""
-    return _changes(summary, "total_balance")
+    return _changes(summary, "total_balance", lookback)
 
 
 # ---------------------------------------------------------------------------
@@ -180,70 +211,42 @@ def available_changes(summary: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _dim_changes(summary: DataFrame, categories: DataFrame, dim: str) -> DataFrame:
+def _dim_changes(summary: DataFrame, categories: DataFrame, dim: str,
+                 lookback: Lookback | None = None) -> DataFrame:
     """Two-level rollup (A4) + as-of changes per category/country.
 
     ≅ ``update_category_changes`` (``function.sql:425-636``) and
-    ``update_country_changes`` (``function.sql:639-855``): the summary is
-    re-aggregated to the dimension via the (broadcast) categories dim at
-    the current AND each lookback timestamp, then diffed.
+    ``update_country_changes`` (``function.sql:639-855``): the summary
+    joins the (broadcast) categories dim and :func:`_horizon_changes` rolls
+    it up to the dimension with a conditional sum per timestamp, the
+    current totals and each lookback total in the same aggregation. A
+    dimension value with no label at a target has no previous total there
+    and coalesces to current.
     """
-    spark = summary.sparkSession
-    latest, targets = _lookback_targets(summary)
-    dim_summary = (
-        summary.join(F.broadcast(categories), "grouped_label")
-        .groupBy(F.col(dim).alias("grouped_label"), "created_at")
-        .agg(
-            F.sum("count").alias("count"),
-            F.sum("total_balance").alias("total_balance"),
-            F.sum("total_escrow").alias("total_escrow"),
-            F.sum("total_xrp").alias("total_xrp"),
-        )
-    )
+    latest, targets = lookback or _lookback_targets(summary)
     if latest is None:
-        return spark.createDataFrame(
+        return summary.sparkSession.createDataFrame(
             [],
             "grouped_label string, hours int, count long, total_balance double, "
             "total_escrow double, total_xrp double, balance_change double, "
             "percentage_change double, calculated_at timestamp",
         )
-    horizon_df = spark.createDataFrame(
-        [(h, targets[h]) for h in HORIZONS], "hours int, target_ts timestamp"
-    )
-    current = dim_summary.filter(F.col("created_at") == F.lit(latest))
-    hist = dim_summary.select(
-        F.col("grouped_label").alias("_gl"),
-        F.col("created_at").alias("_ts"),
-        F.col("total_xrp").alias("prev_raw"),
-    )
-    fanned = current.crossJoin(F.broadcast(horizon_df))
-    joined = fanned.join(
-        hist,
-        (fanned["grouped_label"] == hist["_gl"])
-        & (fanned["target_ts"] == hist["_ts"]),
-        "left",
-    )
-    prev = F.coalesce(F.col("prev_raw"), F.col("total_xrp"))
-    curd, prevd = F.col("total_xrp").cast("double"), prev.cast("double")
-    return joined.select(
-        "grouped_label",
-        "hours",
-        "count",
-        "total_balance",
-        "total_escrow",
-        "total_xrp",
-        (F.col("total_xrp") - prev).alias("balance_change"),
-        F.round(safe_ratio_col(curd, prevd), 6).alias("percentage_change"),
-        F.lit(latest).alias("calculated_at"),
+    return _horizon_changes(
+        summary.join(F.broadcast(categories), "grouped_label"),
+        F.col(dim), F.sum,
+        ["count", "total_balance", "total_escrow", "total_xrp"], "total_xrp",
+        latest, targets,
     )
 
 
-def category_changes(summary: DataFrame, categories: DataFrame) -> DataFrame:
-    return _dim_changes(summary, categories, "category")
+def category_changes(summary: DataFrame, categories: DataFrame,
+                     lookback: Lookback | None = None) -> DataFrame:
+    return _dim_changes(summary, categories, "category", lookback)
 
 
-def country_changes(summary: DataFrame, categories: DataFrame) -> DataFrame:
-    return _dim_changes(summary, categories, "country")
+def country_changes(summary: DataFrame, categories: DataFrame,
+                    lookback: Lookback | None = None) -> DataFrame:
+    return _dim_changes(summary, categories, "country", lookback)
 
 
 # ---------------------------------------------------------------------------

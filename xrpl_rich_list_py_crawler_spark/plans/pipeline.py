@@ -65,20 +65,25 @@ def refresh_analytics(
     # from this one series — without a barrier each materialization would
     # recompute the label-canonicalized aggregation from the raw rows
     summary = step("summary", lambda: jobs.summary_series(richlist).persist())
+    # the lookback timestamps are global to the summary: resolve them once
+    # for all four change tables (each would otherwise collect them again)
+    lookback = jobs._lookback_targets(summary)
     if now is None:
-        from pyspark.sql import functions as F
-
-        now = summary.agg(F.max("created_at")).collect()[0][0]
+        now = lookback[0]
     res = RefreshResult(
         summary=summary,
-        balance_changes=step("balance_changes",
-                             lambda: jobs.balance_changes(summary)),
-        available_changes=step("available_changes",
-                               lambda: jobs.available_changes(summary)),
-        category_changes=step("category_changes",
-                              lambda: jobs.category_changes(summary, categories)),
-        country_changes=step("country_changes",
-                             lambda: jobs.country_changes(summary, categories)),
+        balance_changes=step(
+            "balance_changes",
+            lambda: jobs.balance_changes(summary, lookback)),
+        available_changes=step(
+            "available_changes",
+            lambda: jobs.available_changes(summary, lookback)),
+        category_changes=step(
+            "category_changes",
+            lambda: jobs.category_changes(summary, categories, lookback)),
+        country_changes=step(
+            "country_changes",
+            lambda: jobs.country_changes(summary, categories, lookback)),
         category_statistics=step(
             "category_statistics",
             lambda: jobs.category_statistics(summary, categories, now)),
@@ -124,8 +129,13 @@ def significant_changes_alert(
     ≅ ``post-alert.py:107-114`` → ``get_significant_changes`` → tweet."""
     from ..functions.presentation import alert_text
 
-    summary = jobs.summary_series(richlist)
-    changes = jobs.balance_changes(summary)
-    top = jobs.get_significant_changes(summary, changes, pct_threshold,
-                                       amt_threshold)
-    return alert_text(top, as_of_unix)
+    # persisted: the changes and their join back to the latest summary
+    # both read it, and the lookback resolution runs two jobs over it
+    summary = jobs.summary_series(richlist).persist()
+    try:
+        changes = jobs.balance_changes(summary)
+        top = jobs.get_significant_changes(summary, changes, pct_threshold,
+                                           amt_threshold)
+        return alert_text(top, as_of_unix)
+    finally:
+        summary.unpersist()

@@ -27,6 +27,8 @@ them in single-process pandas for crawl-order equivalence goldens):
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,6 +43,8 @@ from ..operators.frontier import global_rank
 from ..operators.politeness import apply_robots, assign_politeness_gated
 from ..operators.seen import anti_join_seen, anti_join_seen_bloom
 from ..sources.catalog import SnapshotCatalog
+
+_log = logging.getLogger(__name__)
 
 FRONTIER_COLS = [
     "url", "url_hash", "host", "depth", "host_rank", "discovery_ts", "round",
@@ -499,10 +503,20 @@ class CrawlRun:
                     n_bits_override=self._bloom.n_bits,
                 )
                 ex.submit(self.catalog.commit_round, round_n, out).result()
+            try:
                 inc_shards = fut_bloom.result()
-            # commit succeeded → advance the in-memory bloom to this round
-            self._bloom = self._bloom.or_merge(inc_shards)
-            self._bloom_round = round_n
+            except Exception:
+                # round_n is durably committed, so it must not fail: a
+                # caller retrying it would commit it twice. Drop the
+                # in-memory bloom; _bloom_for rebuilds it from the ledger.
+                _log.warning("bloom increment for round %d failed; "
+                             "rebuilding from the ledger next round",
+                             round_n, exc_info=True)
+                self._bloom = None
+            else:
+                # commit succeeded → advance the in-memory bloom to this round
+                self._bloom = self._bloom.or_merge(inc_shards)
+                self._bloom_round = round_n
         else:
             self.catalog.commit_round(round_n, out)
         gated.unpersist()
