@@ -194,3 +194,44 @@ def test_read_appended_below_compaction_floor_raises(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="compaction floor"):
         cat.read_appended(spark, "seen", up_to_round=2)
+
+
+def test_commit_round_failed_write_leaves_catalog_unchanged(spark, tmp_path):
+    """A commit whose second table write fails raises and publishes nothing:
+    the manifest, last_round() and the readers still show only the earlier
+    rounds, and a retry with good frames commits the round exactly once."""
+    from pyspark.sql import functions as F
+
+    cat = SnapshotCatalog(str(tmp_path))
+
+    def frames(r):
+        return {
+            "results": spark.createDataFrame([(r,)], "round int"),
+            "seen": spark.createDataFrame([(r, r)], "url_hash long, round int"),
+        }
+
+    cat.commit_round(1, frames(1))
+    before = cat.manifest()
+    bad = frames(2)
+    bad["seen"] = bad["seen"].select(
+        F.raise_error(F.lit("injected write failure")).cast("long")
+        .alias("url_hash"),
+        "round",
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        cat.commit_round(2, bad)
+    assert cat.manifest() == before
+    assert cat.last_round() == 1
+    for table in ("results", "seen"):
+        rows = cat.read_appended(spark, table).collect()
+        assert [r["round"] for r in rows] == [1]
+        assert not os.path.exists(os.path.join(str(tmp_path), table, "r00002"))
+
+    cat.commit_round(2, frames(2))
+    m = cat.manifest()
+    assert m["committed_rounds"] == [1, 2]
+    assert {t: v["rounds"] for t, v in m["tables"].items()} == {
+        "results": [1, 2], "seen": [1, 2],
+    }
+    rows = cat.read_appended(spark, "seen").collect()
+    assert sorted(r["round"] for r in rows) == [1, 2]

@@ -188,3 +188,16 @@ def test_bloom_increment_failure_after_commit(
             want = [json.loads(line)["url"] for line in f]
         got = cat.read_round(spark, "results", rn).orderBy("rank").select("url")
         assert [r["url"] for r in got.collect()] == want
+
+
+def test_frontier_never_holds_seen_urls(spark, spark_run):
+    """The round runs no seen check on its input frontier, because every
+    committed frontier is already the ingest anti-join's output: frontier r
+    shares no url_hash with the ledger through round r, and the metrics'
+    seen_dups sentinel reads 0."""
+    for r in range(N_ROUNDS + 1):
+        frontier = spark_run.read_state(spark, "frontier", r)
+        seen = spark_run.read_appended(spark, "seen", r)
+        assert frontier.join(seen, "url_hash", "left_semi").count() == 0
+    m = spark_run.read_appended(spark, "metrics")
+    assert m.agg(F.sum("seen_dups")).first()[0] == 0

@@ -18,9 +18,6 @@ broadcast once per round and probed inside an Arrow batch. The exact ledger
 stays columnar on disk and is only anti-joined against the (tiny) maybe-seen
 slice — this is the operator that turns an O(frontier × seen) shuffle into
 O(maybe_seen × seen_shard).
-
-A cuckoo-filter variant (supports deletion, for forced re-crawl) lives in
-:mod:`.cuckoo`.
 """
 
 from __future__ import annotations
@@ -65,28 +62,6 @@ class BloomShards:
     shards: dict[int, bytes]
 
     n_keys: int = 0
-
-    def with_added(self, hashes: np.ndarray) -> "BloomShards":
-        """Return a new bundle with ``hashes`` OR-ed in (incremental round
-        update — avoids rebuilding from the full ledger every round; at
-        cluster scale this is a per-shard executor-side OR-merge)."""
-        h = hashes.astype(np.int64)
-        shard_ids = np.mod(h, self.n_shards)
-        shards = dict(self.shards)
-        for sid in np.unique(shard_ids):
-            bits = np.frombuffer(
-                shards.get(int(sid), bytes(self.n_bits // 8)), dtype=np.uint8
-            ).copy()
-            pos = _positions(h[shard_ids == sid], self.n_bits, self.n_hashes)
-            _set_bits(bits, pos)
-            shards[int(sid)] = bits.tobytes()
-        return BloomShards(
-            n_shards=self.n_shards,
-            n_bits=self.n_bits,
-            n_hashes=self.n_hashes,
-            shards=shards,
-            n_keys=self.n_keys + len(h),
-        )
 
     def or_merge(self, other: "BloomShards") -> "BloomShards":
         """Blob-wise OR of two same-geometry bundles.

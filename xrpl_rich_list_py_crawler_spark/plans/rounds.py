@@ -4,11 +4,18 @@ The Spark re-expression of the reference's hourly pipeline
 (``loader.py`` merge→sort→rank→append fused with ``scraper.py`` parsing and
 ``validator.py`` politeness; SURVEY.md §3.1):
 
-    frontier ──anti-join──▶ unseen ──robots──▶ allowed ──window──▶ selected
-        (bloom+exact)       (broadcast dim)     (token bucket, ≤16/host)
+    frontier ──robots──▶ allowed ──window──▶ selected
+           (broadcast dim)   (token bucket, ≤16/host)
     selected ──join pages──▶ fetched ──Arrow UDF──▶ text+links ──▶
-        results (ranked, lineage-stamped)  +  next frontier  +  metrics
+        results (ranked, lineage-stamped)  +  metrics  +  next frontier
+        (new links ──anti-join──▶ unseen, bloom + exact repair)
         — all committed atomically as one catalog round.
+
+The seen set is checked once per URL, when it is discovered (step 8), as
+the reference dedups on insert (``processed_accounts``, ``loader.py:140,155``;
+``UNIQUE (address, snapshot_date)``, ``table.sql:13``). Every committed
+frontier is already ``merged − seen_now`` and round 0's ledger is empty, so
+a round's input frontier never holds a seen URL (``seen_dups`` reads 0).
 
 Semantics (shared verbatim with plans/simulator.py, which re-implements
 them in single-process pandas for crawl-order equivalence goldens):
@@ -259,19 +266,15 @@ class CrawlRun:
         frontier = self._frontier(prev)
         seen = self._seen(prev)
 
-        # 1. dedup against the seen set (bloom pre-filter + exact repair)
-        if self.use_bloom:
-            shards = self._bloom_for(prev, seen)
-            unseen = anti_join_seen_bloom(self.spark, frontier, seen, shards)
-        else:
-            unseen = anti_join_seen(frontier, seen)
+        # 1. no seen check here: step 8 of the round that committed this
+        # frontier already removed every seen URL from it.
 
         # 2. robots gate (broadcast dim) + politeness token bucket (window).
         # ``gated`` feeds denied/selected/deferred/results/metrics — persist
-        # once so the four table writes don't re-run the anti-join + window.
+        # once so the four table writes don't re-run the window.
         gated = assign_politeness_gated(
             apply_robots(
-                unseen, self.robots,
+                frontier, self.robots,
                 active_only=self.robots_active_only,
                 wildcard=self.wildcard_robots,
             )
@@ -341,9 +344,8 @@ class CrawlRun:
         )
 
         # 6. seen increment: attempted fetches + robots-denied. Persisted:
-        # four consumers (the seen table write, the increment bloom build,
-        # the step-8 seen_now union, and the clean-slice anti-join) would
-        # otherwise each replay the distinct shuffle (r06).
+        # the seen table write, the increment bloom build and step 8's
+        # anti-joins would otherwise each replay the distinct shuffle (r06).
         new_seen = (
             parsed.select("url_hash")
             .unionByName(denied.select("url_hash"))
@@ -381,10 +383,10 @@ class CrawlRun:
             links = filter_traps(links)
 
         # 8. next frontier = deferred ∪ new links, collapsed per url_hash to
-        #    min (depth, discovery_ts), minus everything now seen. The seen
-        #    check is bloom-first (updated with this round's increment) with
-        #    exact repair — at 10^10 the exact ledger anti-join only ever
-        #    touches the maybe-seen slice.
+        #    min (depth, discovery_ts), minus everything now seen — the
+        #    round's only seen check. It is bloom-first with exact repair:
+        #    at 10^10 the exact ledger anti-join only ever touches the
+        #    maybe-seen slice.
         candidates = deferred.select(*[c for c in FRONTIER_COLS if c != "round"]).unionByName(
             links.select(*[c for c in FRONTIER_COLS if c != "round"])
         )
@@ -404,22 +406,19 @@ class CrawlRun:
                     self.spark.createDataFrame([], "url_hash long")).unionByName(
             new_seen.select("url_hash")
         )
-        if self.use_bloom and self._bloom is not None:
-            # r06: prefilter with the PREVIOUS rounds' bloom (this round's
+        bloom = self._bloom_for(prev, seen) if self.use_bloom else None
+        if bloom is not None:
+            # prefilter with the PREVIOUS rounds' bloom (this round's
             # increment is NOT in it), then repair exactly: rows the old
-            # bloom cannot clear get the full seen_now anti-join as
-            # before, and rows it does clear — definitely unseen in prior
-            # rounds — still get an exact anti-join against new_seen (the
-            # per-round increment, politeness-budget-bounded, so AQE
-            # broadcasts it). Result set is identical to prefiltering
-            # with the OR-merged bloom (both compute merged − seen_now),
-            # but the increment shards no longer need to exist before
-            # commit — their build is overlapped with the commit writes
-            # below instead of serializing ~2s/round in front of them.
+            # bloom cannot clear get the full seen_now anti-join, and rows
+            # it does clear — definitely unseen in prior rounds — still get
+            # an exact anti-join against new_seen (the per-round increment,
+            # politeness-budget-bounded, so AQE broadcasts it). Result set
+            # is identical to prefiltering with the OR-merged bloom (both
+            # compute merged − seen_now), so the increment shards are
+            # built after the commit instead of in front of it.
             unseen_merged = anti_join_seen(
-                anti_join_seen_bloom(
-                    self.spark, merged, seen_now, self._bloom
-                ),
+                anti_join_seen_bloom(self.spark, merged, seen_now, bloom),
                 new_seen,
             )
         else:
@@ -480,31 +479,22 @@ class CrawlRun:
             "seen": new_seen,
             "frontier": next_frontier,
         }
-        if self.use_bloom and self._bloom is not None:
+        self.catalog.commit_round(round_n, out)
+        if bloom is not None:
             # increment shards are built executor-side with the SAME
             # geometry, then OR-merged blob-wise: only n_shards bitsets
             # reach the driver — never row data (a round's increment is
             # per-host-budget × host-count, which at 10^10-frontier scale
             # is millions of longs; collecting it would OOM the driver).
-            # r06: the build runs CONCURRENTLY with the commit writes
-            # (independent jobs over the persisted new_seen — the same
-            # fair-scheduling overlap commit_round already uses), hiding
-            # its ~2s/round behind the slowest table write.
-            from concurrent.futures import ThreadPoolExecutor
-
             from ..operators.seen import build_bloom_shards
 
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                fut_bloom = ex.submit(
-                    build_bloom_shards,
-                    new_seen,
-                    n_shards=self._bloom.n_shards,
-                    n_hashes=self._bloom.n_hashes,
-                    n_bits_override=self._bloom.n_bits,
-                )
-                ex.submit(self.catalog.commit_round, round_n, out).result()
             try:
-                inc_shards = fut_bloom.result()
+                inc_shards = build_bloom_shards(
+                    new_seen,
+                    n_shards=bloom.n_shards,
+                    n_hashes=bloom.n_hashes,
+                    n_bits_override=bloom.n_bits,
+                )
             except Exception:
                 # round_n is durably committed, so it must not fail: a
                 # caller retrying it would commit it twice. Drop the
@@ -515,10 +505,8 @@ class CrawlRun:
                 self._bloom = None
             else:
                 # commit succeeded → advance the in-memory bloom to this round
-                self._bloom = self._bloom.or_merge(inc_shards)
+                self._bloom = bloom.or_merge(inc_shards)
                 self._bloom_round = round_n
-        else:
-            self.catalog.commit_round(round_n, out)
         gated.unpersist()
         parsed.unpersist()
         next_frontier.unpersist()

@@ -116,9 +116,11 @@ METRICS = StructType(
         # target was already crawled — the engine's analog of the
         # reference's UNIQUE-conflict dup count (table.sql:13): dedup
         # happens at INSERT time there, at the ingest anti-join here.
-        # (``seen_dups`` above guards the other boundary — candidates
-        # already in the round's frontier — which is 0 by construction
-        # on every current path and stays as the invariant sentinel.)
+        # (``seen_dups`` above counts candidates already seen when the
+        # round starts. It is 0 by construction: every committed frontier
+        # is the ingest anti-join's output, so the round runs no seen
+        # check of its own, and the column stays as the invariant's
+        # sentinel.)
         StructField("links_seen_dropped", LongType(), False),
     ]
 )

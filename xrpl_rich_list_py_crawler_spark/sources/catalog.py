@@ -77,26 +77,20 @@ class SnapshotCatalog:
         """Atomically publish one round's table set.
 
         Data is fully written (tmp dirs) before any rename; the manifest
-        swap is the commit point. The per-table writes run CONCURRENTLY
-        (driver threads over one SparkContext — Spark's fair-scheduling
-        pattern): a round's tables are independent DAG branches off shared
-        persisted frames, so overlapping them removes ~len(tables)-1
-        sequential job barriers per round.
+        swap is the commit point. The tables are written one after another
+        from the calling thread: a round's tables share persisted frames,
+        and concurrent writer threads over one SparkContext recomputed
+        those frames twice and could deadlock the JVM.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write(item):
-            name, df = item
+        finals = []
+        for name, df in tables.items():
             final = self._table_dir(name, round_n)
             tmp = final + ".tmp"
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
             os.makedirs(os.path.dirname(final), exist_ok=True)
             df.write.mode("overwrite").parquet(tmp)
-            return (tmp, final)
-
-        with ThreadPoolExecutor(max_workers=max(len(tables), 1)) as ex:
-            finals = list(ex.map(_write, tables.items()))
+            finals.append((tmp, final))
         for tmp, final in finals:
             if os.path.exists(final):
                 shutil.rmtree(final)
