@@ -235,3 +235,85 @@ def test_commit_round_failed_write_leaves_catalog_unchanged(spark, tmp_path):
     }
     rows = cat.read_appended(spark, "seen").collect()
     assert sorted(r["round"] for r in rows) == [1, 2]
+
+
+# -- read/commit contract: visibility, retry, compaction, retention ----------
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect()) if df is not None else []
+
+
+def test_contract_commit_visibility_and_resume(spark, tmp_path):
+    """Committed rounds are exactly the visible rounds; up_to filters;
+    state reads resume from the last committed snapshot."""
+    cat = SnapshotCatalog(str(tmp_path))
+    for r in (1, 2, 3):
+        cat.commit_round(r, {
+            "seen": spark.createDataFrame([(r * 10,)], "url_hash long"),
+            "frontier": spark.createDataFrame([(r, "u")], "round int, url string"),
+        })
+    assert cat.last_round() == 3
+    assert cat.read_appended(spark, "seen").count() == 3
+    assert cat.read_appended(spark, "seen", up_to_round=2).count() == 2
+    st = cat.read_state(spark, "frontier")
+    assert _rows(st) == [(3, "u")]
+    assert _rows(cat.read_state(spark, "frontier", 1)) == [(1, "u")]
+    assert cat.read_appended(spark, "nonexistent") is None
+    assert cat.row_count("seen", 2) == 1
+
+
+def test_contract_recommit_replaces_never_doubles(spark, tmp_path):
+    """Conflict/retry: re-committing a round (through a SECOND handle on
+    the same root — the concurrent-committer analog) REPLACES that round's
+    content; nothing doubles, later rounds unaffected."""
+    cat = SnapshotCatalog(str(tmp_path))
+    df_a = spark.createDataFrame([(1,), (2,)], "url_hash long")
+    df_b = spark.createDataFrame([(7,), (8,), (9,)], "url_hash long")
+    cat.commit_round(1, {"seen": df_a})
+    cat.commit_round(2, {"seen": df_a})
+    # retry round 1 with different content via a fresh handle (manifest
+    # reload path)
+    SnapshotCatalog(cat.root).commit_round(1, {"seen": df_b})
+    got = cat.read_appended(spark, "seen", up_to_round=1)
+    assert _rows(got) == [(7,), (8,), (9,)]
+    assert cat.read_appended(spark, "seen").count() == 5  # 3 + round 2's 2
+    assert cat.last_round() == 2
+
+
+def test_contract_compact_preserves_reads(spark, tmp_path):
+    """compact_rounds is invisible to the read surface the engine uses:
+    identical row multiset, identical up-to-latest as-of reads, round
+    bookkeeping still consistent — and compaction composes (second call
+    after more commits)."""
+    cat = SnapshotCatalog(str(tmp_path))
+    for r in (1, 2, 3):
+        cat.commit_round(r, {"seen": spark.createDataFrame(
+            [(r, i) for i in range(5)], "round_src int, i long")})
+    before = _rows(cat.read_appended(spark, "seen"))
+    cat.compact_rounds(spark, "seen")
+    assert _rows(cat.read_appended(spark, "seen")) == before
+    assert _rows(cat.read_appended(spark, "seen", up_to_round=3)) == before
+    # keep committing + compacting: multiset still exact
+    cat.commit_round(4, {"seen": spark.createDataFrame(
+        [(4, i) for i in range(5)], "round_src int, i long")})
+    cat.compact_rounds(spark, "seen")
+    assert len(_rows(cat.read_appended(spark, "seen"))) == 20
+    assert cat.last_round() == 4
+
+
+def test_contract_expire_keeps_dedup_keys(spark, tmp_path):
+    """Retention drops old rounds of DATA tables only: RETAIN_TABLES
+    (seen/frontier — the dedup key and resume state) keep every round."""
+    cat = SnapshotCatalog(str(tmp_path))
+    for r in (1, 2, 3, 4):
+        cat.commit_round(r, {
+            "metrics": spark.createDataFrame([(r,)], "n long"),
+            "seen": spark.createDataFrame([(r,)], "url_hash long"),
+        })
+    dropped = cat.expire_rounds(keep_last=2)
+    assert dropped == [1, 2]
+    assert cat.read_appended(spark, "metrics").count() == 2
+    assert cat.read_appended(spark, "seen").count() == 4  # retained
+    # expiring again below the floor is a no-op
+    assert cat.expire_rounds(keep_last=2) == []

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from xrpl_rich_list_py_crawler_spark.operators.politeness import (
     apply_robots,
-    assign_politeness,
+    assign_politeness_gated,
     parse_robots_txt,
 )
 
@@ -79,9 +79,7 @@ def test_unknown_host_defaults(spark):
 
 
 def test_token_bucket_budget_and_delay(spark):
-    out = assign_politeness(
-        apply_robots(_cands(spark), _robots(spark)).filter("NOT robots_denied")
-    )
+    out = assign_politeness_gated(apply_robots(_cands(spark), _robots(spark)))
     a = out.filter("host = 'a.com'").orderBy("host_slot").collect()
     assert sum(r["selected"] for r in a) == 5  # budget
     # slots are 1..n, delay = (slot-1) * crawl_delay
@@ -428,7 +426,7 @@ def test_budget_from_delay_slots(spark):
         "url string, url_hash long, host string, depth int, "
         "host_rank double, discovery_ts timestamp",
     )
-    assigned = pol.assign_politeness(pol.apply_robots(cand, dim))
+    assigned = pol.assign_politeness_gated(pol.apply_robots(cand, dim))
     sel = {
         h: sum(r["selected"] for r in assigned.collect() if r["host"] == h)
         for h in ("slow", "fast")

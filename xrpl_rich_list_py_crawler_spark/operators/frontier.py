@@ -28,11 +28,6 @@ def order_cols() -> list:
     ]
 
 
-def priority_order(df: DataFrame) -> DataFrame:
-    """Globally ordered frontier view (for presentation / small outputs)."""
-    return df.orderBy(*order_cols())
-
-
 def salted_repartition(df: DataFrame, n_partitions: int, salt_buckets: int = 16) -> DataFrame:
     """Skew-defeating physical layout for per-host work.
 

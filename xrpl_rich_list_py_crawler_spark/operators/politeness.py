@@ -300,46 +300,25 @@ def apply_robots(
     )
 
 
-def assign_politeness(allowed: DataFrame) -> DataFrame:
-    """Token-bucket slot assignment within each host (T8 as window math).
+def assign_politeness_gated(gated: DataFrame) -> DataFrame:
+    """Token-bucket slot assignment within each host (T8 as window math),
+    over the *gated* frame (``apply_robots`` output, robots_denied rows kept).
 
     Adds:
       * ``host_slot``     — 1-based fetch position within the host this
                             round (``row_number`` over the priority order);
-      * ``selected``      — slot ≤ per-host budget (reference batch_size=16,
-                            ``validator.py:123``); unselected rows are
-                            *deferred*, not dropped — they stay in the
-                            frontier for the next round;
+      * ``selected``      — allowed and slot ≤ per-host budget (reference
+                            batch_size=16, ``validator.py:123``); unselected
+                            allowed rows are *deferred*, not dropped — they
+                            stay in the frontier for the next round;
       * ``fetch_delay_s`` — (slot-1) × crawl_delay: the deterministic stand-in
                             for ``asyncio.sleep`` pacing
                             (``validator.py:181-182``).
 
-    One shuffle on ``host``; the window sort is the only per-host work.
-    """
-    w = Window.partitionBy("host").orderBy(
-        F.col("depth").asc(),
-        F.col("discovery_ts").asc(),
-        F.col("url_hash").asc(),
-    )
-    slot = F.row_number().over(w)
-    return (
-        allowed.withColumn("host_slot", slot)
-        .withColumn("selected", F.col("host_slot") <= F.col("max_fetches_per_round"))
-        .withColumn(
-            "fetch_delay_s",
-            (F.col("host_slot") - 1).cast("double") * F.col("crawl_delay_s"),
-        )
-    )
-
-
-def assign_politeness_gated(gated: DataFrame) -> DataFrame:
-    """assign_politeness over the *gated* frame (robots_denied rows kept).
-
-    Denied rows sort last within their host, so allowed rows receive the
-    identical 1..n slots assign_politeness would give them — but the whole
-    round state lives in ONE frame that can be persisted once and sliced
-    into denied/selected/deferred without recomputing the anti-join+window
-    chain per consumer. ``selected`` is False for denied rows.
+    Denied rows sort last within their host, so allowed rows get slots
+    1..n, and the whole round state lives in ONE frame that can be
+    persisted once and sliced into denied/selected/deferred. One shuffle
+    on ``host``; the window sort is the only per-host work.
     """
     w = Window.partitionBy("host").orderBy(
         F.col("robots_denied").asc(),

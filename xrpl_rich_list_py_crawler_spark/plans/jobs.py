@@ -262,15 +262,19 @@ def _hourly(summary3d: DataFrame) -> DataFrame:
     )
 
 
-def category_statistics(summary: DataFrame, categories: DataFrame, now) -> DataFrame:
-    """≅ ``update_category_statistics`` (``function.sql:969-999``)."""
+def _dim_statistics(summary: DataFrame, categories: DataFrame, now,
+                    dim: str) -> DataFrame:
+    """≅ ``update_category_statistics`` (``function.sql:969-999``) and
+    ``update_country_statistics`` (``function.sql:1002-1032``): the last 3
+    days of the summary, bucketed by hour and rolled up to ``dim`` through
+    the (broadcast) categories dim."""
     s3 = summary.filter(
         F.col("created_at") >= F.lit(now) - F.expr("INTERVAL 3 DAYS")
     )
     return (
         _hourly(s3)
         .join(F.broadcast(categories), "grouped_label")
-        .groupBy(F.col("category").alias("grouped_label"), "created_at")
+        .groupBy(F.col(dim).alias("grouped_label"), "created_at")
         .agg(
             F.sum("count").alias("count"),
             F.sum("total_balance").alias("total_balance"),
@@ -282,28 +286,14 @@ def category_statistics(summary: DataFrame, categories: DataFrame, now) -> DataF
             "total_xrp", "created_at",
         )
     )
+
+
+def category_statistics(summary: DataFrame, categories: DataFrame, now) -> DataFrame:
+    return _dim_statistics(summary, categories, now, "category")
 
 
 def country_statistics(summary: DataFrame, categories: DataFrame, now) -> DataFrame:
-    """≅ ``update_country_statistics`` (``function.sql:1002-1032``)."""
-    s3 = summary.filter(
-        F.col("created_at") >= F.lit(now) - F.expr("INTERVAL 3 DAYS")
-    )
-    return (
-        _hourly(s3)
-        .join(F.broadcast(categories), "grouped_label")
-        .groupBy(F.col("country").alias("grouped_label"), "created_at")
-        .agg(
-            F.sum("count").alias("count"),
-            F.sum("total_balance").alias("total_balance"),
-            F.sum("total_escrow").alias("total_escrow"),
-            F.sum("total_xrp").alias("total_xrp"),
-        )
-        .select(
-            "grouped_label", "count", "total_balance", "total_escrow",
-            "total_xrp", "created_at",
-        )
-    )
+    return _dim_statistics(summary, categories, now, "country")
 
 
 def available_statistics(summary: DataFrame, now) -> DataFrame:

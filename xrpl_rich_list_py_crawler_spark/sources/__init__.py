@@ -1,28 +1,10 @@
 """Sources & sinks: deterministic fixture generators and the snapshot
-catalog (Parquet + JSON-manifest emulation of Iceberg atomic commits)."""
+catalog (Parquet + JSON-manifest emulation of Iceberg atomic commits).
 
-from .fixtures import ensure_crawl_fixtures, generate_crawl_fixtures  # noqa: F401
+Only the two names the crawl entry points need are re-exported; the
+readers and writers for WARC, CDX and HTTP live in their own submodules
+and are imported from there.
+"""
+
 from .catalog import SnapshotCatalog  # noqa: F401
-from .iceberg_catalog import (  # noqa: F401
-    IcebergSnapshotCatalog,
-    IcebergUnavailable,
-    iceberg_available,
-)
-from .http_fetch import (  # noqa: F401
-    corpus_transport,
-    http_fetch,
-    urllib_transport,
-)
-from .warc import (  # noqa: F401
-    build_warc,
-    iter_warc_records,
-    parse_warc_df,
-    read_warc,
-    to_warc_files,
-)
-from .cdx import (  # noqa: F401
-    parse_cdx_lines,
-    read_cdx,
-    surt_col,
-    to_cdx_lines,
-)
+from .fixtures import ensure_crawl_fixtures  # noqa: F401

@@ -180,20 +180,17 @@ class SnapshotCatalog:
     #: expiring only snapshot rows)
     RETAIN_TABLES = ("seen", "frontier")
 
-    def expire_rounds(
-        self, keep_last: int, retain: tuple[str, ...] | None = None
-    ) -> list[int]:
+    def expire_rounds(self, keep_last: int) -> list[int]:
         """Retention ≅ cleanup_old_rich_list_data (function.sql:408-422) /
         Iceberg expire_snapshots: drop all but the last ``keep_last``
         committed rounds of append tables' physical data, manifest first
         so readers never see a dangling path.
 
-        Tables in ``retain`` (default :data:`RETAIN_TABLES`) keep every
-        round: the ``seen`` ledger is the crawl's dedup key and the
-        ``frontier`` is resume state — expiring either would silently
-        re-fetch previously-crawled URLs after retention kicks in.
+        Tables in :data:`RETAIN_TABLES` keep every round: the ``seen``
+        ledger is the crawl's dedup key and the ``frontier`` is resume
+        state — expiring either would silently re-fetch previously-crawled
+        URLs after retention kicks in.
         """
-        retain = self.RETAIN_TABLES if retain is None else retain
         m = self.manifest()
         rounds = m["committed_rounds"]
         if len(rounds) <= keep_last:
@@ -202,14 +199,14 @@ class SnapshotCatalog:
         keep = rounds[-keep_last:]
         m["committed_rounds"] = keep
         for t in m["tables"]:
-            if t in retain:
+            if t in self.RETAIN_TABLES:
                 continue
             m["tables"][t]["rounds"] = [
                 r for r in m["tables"][t]["rounds"] if r in keep
             ]
         self._swap_manifest(m)
         for t, meta in list(m["tables"].items()):
-            if t in retain:
+            if t in self.RETAIN_TABLES:
                 continue
             dirs = meta.get("dirs", {})
             for r in drop:
@@ -225,7 +222,6 @@ class SnapshotCatalog:
         spark: SparkSession,
         table: str,
         up_to_round: int | None = None,
-        target_files: int = 1,
     ) -> list[int]:
         """Small-files maintenance ≅ Iceberg ``rewrite_data_files``: merge
         an append table's committed round increments (≤ ``up_to_round``)
@@ -269,7 +265,7 @@ class SnapshotCatalog:
             lambda a, b: a.unionByName(b),
             [spark.read.parquet(p) for p in old_paths],
         )
-        df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
         os.rename(tmp, new_dir)
         merged_away = rounds[:-1]
         meta["rounds"] = [r for r in meta["rounds"] if r not in merged_away]
