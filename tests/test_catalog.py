@@ -1,6 +1,8 @@
 """Snapshot catalog: atomic commits, snapshot isolation, resume, retention."""
 
 import os
+import shutil
+import uuid
 
 import pytest
 
@@ -317,3 +319,179 @@ def test_contract_expire_keeps_dedup_keys(spark, tmp_path):
     assert cat.read_appended(spark, "seen").count() == 4  # retained
     # expiring again below the floor is a no-op
     assert cat.expire_rounds(keep_last=2) == []
+
+
+# -- fault injection: every step of a publish leaves a whole snapshot -------
+
+
+class _Injected(Exception):
+    pass
+
+
+def _inject(monkeypatch, cat, fault):
+    """Arm one fault: ``rename<k>`` fails the rename after k renames,
+    ``swap`` fails the manifest swap, ``cleanup`` fails the first
+    directory delete after the swap."""
+    from xrpl_rich_list_py_crawler_spark.sources import catalog
+
+    if fault.startswith("rename"):
+        k, real, done = int(fault[len("rename"):]), os.rename, []
+
+        def rename(src, dst):
+            if len(done) == k:
+                raise _Injected(fault)
+            done.append(dst)
+            real(src, dst)
+
+        monkeypatch.setattr(catalog.os, "rename", rename)
+    elif fault == "swap":
+        def swap(m):
+            raise _Injected(fault)
+
+        monkeypatch.setattr(cat, "_swap_manifest", swap)
+    else:
+        real_swap, real_rmtree, swapped = cat._swap_manifest, shutil.rmtree, []
+
+        def swap(m):
+            real_swap(m)
+            swapped.append(True)
+
+        def rmtree(path, *a, **kw):
+            if swapped:
+                raise _Injected(fault)
+            real_rmtree(path, *a, **kw)
+
+        monkeypatch.setattr(cat, "_swap_manifest", swap)
+        monkeypatch.setattr(catalog.shutil, "rmtree", rmtree)
+
+
+def _round_frames(spark, r, tag):
+    return {
+        "results": spark.createDataFrame([(r, tag)], "round int, tag string"),
+        "seen": spark.createDataFrame(
+            [(r * 100 + ord(tag), r)], "url_hash long, round int"),
+        "frontier": spark.createDataFrame(
+            [(f"u{r}{tag}", r)], "url string, round int"),
+    }
+
+
+def _expected(tags):
+    """The reader view of a catalog whose round r was committed with
+    ``_round_frames(spark, r, tags[r])``."""
+    return {
+        "last": max(tags),
+        "results": sorted((r, t) for r, t in tags.items()),
+        "seen": sorted((r * 100 + ord(t), r) for r, t in tags.items()),
+        "frontier": {r: [(f"u{r}{t}", r)] for r, t in tags.items()},
+    }
+
+
+def _view(spark, cat):
+    m = cat.manifest()
+    return {
+        "last": cat.last_round(),
+        "results": _rows(cat.read_appended(spark, "results")),
+        "seen": _rows(cat.read_appended(spark, "seen")),
+        "frontier": {
+            r: _rows(cat.read_state(spark, "frontier", r))
+            for r in m["tables"]["frontier"]["rounds"]
+        },
+    }
+
+
+_OPS = {
+    # op: (committed before, op's round and tag)
+    "fresh": ({1: "a"}, (2, "a")),
+    "recommit": ({1: "a", 2: "a"}, (1, "b")),
+}
+
+
+@pytest.mark.parametrize("fault", ["rename0", "rename1", "rename2", "swap",
+                                   "cleanup"])
+@pytest.mark.parametrize("op", sorted(_OPS))
+def test_commit_fault_matrix(spark, tmp_path, monkeypatch, op, fault):
+    """A commit (fresh round or re-commit) that fails at any step shows
+    wholly the old snapshot while the manifest is unchanged and wholly the
+    new one once it is swapped — never a mix, never a missing path — and
+    a retry gives the uninterrupted answer."""
+    before, (r, tag) = _OPS[op]
+    after = {**before, r: tag}
+    cat = SnapshotCatalog(str(tmp_path))
+    for rr, t in before.items():
+        cat.commit_round(rr, _round_frames(spark, rr, t))
+    old_manifest = cat.manifest()
+
+    _inject(monkeypatch, cat, fault)
+    try:
+        cat.commit_round(r, _round_frames(spark, r, tag))
+    except _Injected:
+        pass
+    monkeypatch.undo()
+    swapped = cat.manifest() != old_manifest
+    assert _view(spark, cat) == _expected(after if swapped else before)
+
+    cat.commit_round(r, _round_frames(spark, r, tag))
+    assert _view(spark, cat) == _expected(after)
+    m = cat.manifest()
+    assert m["committed_rounds"] == sorted(after)
+    assert {t: v["rounds"] for t, v in m["tables"].items()} == {
+        t: sorted(after) for t in ("results", "seen", "frontier")
+    }
+
+
+@pytest.mark.parametrize("fault", ["rename0", "swap", "cleanup"])
+def test_compact_fault_matrix(spark, tmp_path, monkeypatch, fault):
+    """A compaction that fails at any step leaves the rows readable and
+    unchanged, under either the old or the compacted round list, and a
+    retry ends in the compacted layout."""
+    cat = SnapshotCatalog(str(tmp_path))
+    rows = []
+    for r in (1, 2, 3):
+        df = spark.createDataFrame([(r, i) for i in range(2)],
+                                   "url_hash long, round int")
+        rows += [(r, i) for i in range(2)]
+        cat.commit_round(r, {"seen": df})
+
+    _inject(monkeypatch, cat, fault)
+    try:
+        cat.compact_rounds(spark, "seen")
+    except _Injected:
+        pass
+    monkeypatch.undo()
+    assert cat.manifest()["tables"]["seen"]["rounds"] in ([1, 2, 3], [3])
+    assert _rows(cat.read_appended(spark, "seen")) == sorted(rows)
+
+    cat.compact_rounds(spark, "seen")
+    assert cat.manifest()["tables"]["seen"]["rounds"] == [3]
+    assert cat.manifest()["tables"]["seen"]["compacted_through"] == 3
+    assert _rows(cat.read_appended(spark, "seen")) == sorted(rows)
+
+
+# -- read cost ---------------------------------------------------------------
+
+
+def _spark_jobs(spark, fn):
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"catalog-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "catalog read cost")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("n_rounds", [1, 5])
+def test_read_appended_is_one_scan(spark, tmp_path, n_rounds):
+    """read_appended scans every committed round at once: it costs at
+    most one Spark job (the schema inference), whatever the round count."""
+    cat = SnapshotCatalog(str(tmp_path))
+    for r in range(1, n_rounds + 1):
+        cat.commit_round(r, {"seen": spark.createDataFrame(
+            [(r, r)], "url_hash long, round int")})
+    out = []
+    assert _spark_jobs(spark, lambda: out.append(
+        cat.read_appended(spark, "seen"))) <= 1
+    assert _rows(out[0]) == [(r, r) for r in range(1, n_rounds + 1)]

@@ -229,8 +229,9 @@ def test_revisit_seeds_bridge(spark, tmp_path):
     from xrpl_rich_list_py_crawler_spark.plans.rounds import (
         CrawlRun, revisit_seeds,
     )
-    from xrpl_rich_list_py_crawler_spark.sources import (
-        SnapshotCatalog, ensure_crawl_fixtures,
+    from xrpl_rich_list_py_crawler_spark.sources.catalog import SnapshotCatalog
+    from xrpl_rich_list_py_crawler_spark.sources.fixtures import (
+        ensure_crawl_fixtures,
     )
 
     d = ensure_crawl_fixtures("sf0.001")

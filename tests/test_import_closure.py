@@ -10,7 +10,7 @@ OUTSIDE_CORE = (
     "operators.curation", "operators.dedup", "operators.similarity",
     "operators.textstats", "operators.lm", "operators.graph",
     "operators.packing", "operators.sessions", "operators.sitemap",
-    "sources.warc", "sources.cdx", "sources.http_fetch",
+    "sources.warc", "sources.cdx", "sources.http_fetch", "sources.fixtures",
 )
 
 

@@ -26,7 +26,8 @@ spark = (SparkSession.builder.master("local[3]")
          .config("spark.ui.enabled", "false")
          .config("spark.ui.showConsoleProgress", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-from xrpl_rich_list_py_crawler_spark.sources import ensure_crawl_fixtures, SnapshotCatalog
+from xrpl_rich_list_py_crawler_spark.sources.catalog import SnapshotCatalog
+from xrpl_rich_list_py_crawler_spark.sources.fixtures import ensure_crawl_fixtures
 from xrpl_rich_list_py_crawler_spark.plans import CrawlRun
 d = ensure_crawl_fixtures("sf0.001")
 pages = spark.read.parquet(f"{{d}}/pages.parquet")

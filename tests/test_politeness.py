@@ -4,6 +4,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from xrpl_rich_list_py_crawler_spark.functions.hashing import spark_xxhash64_str
 from xrpl_rich_list_py_crawler_spark.operators.politeness import (
     apply_robots,
     assign_politeness_gated,
@@ -16,10 +17,11 @@ def _cands(spark, n_per_host=20, hosts=("a.com", "b.com")):
     rows = []
     for h in hosts:
         for i in range(n_per_host):
+            url = f"https://{h}/p/{i}"
             rows.append(
                 (
-                    f"https://{h}/p/{i}",
-                    hash((h, i)) % (2**62),
+                    url,
+                    spark_xxhash64_str(url),  # = the engine's xxhash64("url")
                     h,
                     i % 3,
                     0.5,
@@ -580,8 +582,9 @@ def test_crawl_run_wildcard_robots_identical_on_literal_fixture(
     byte-for-byte on the fixture universe (its robots rules are all
     literal prefixes) — the fidelity path is a drop-in."""
     from xrpl_rich_list_py_crawler_spark.plans.rounds import CrawlRun
-    from xrpl_rich_list_py_crawler_spark.sources import (
-        SnapshotCatalog, ensure_crawl_fixtures,
+    from xrpl_rich_list_py_crawler_spark.sources.catalog import SnapshotCatalog
+    from xrpl_rich_list_py_crawler_spark.sources.fixtures import (
+        ensure_crawl_fixtures,
     )
 
     d = ensure_crawl_fixtures("sf0.001")

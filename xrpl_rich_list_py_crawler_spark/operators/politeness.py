@@ -12,21 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Deterministic intra-host priority (BASELINE.json north_rule frontier
-#: order). ``url_hash`` is the total-order tie-break that makes crawl order
-#: a pure function of data, never of partitioning (SURVEY.md §7.4).
-PRIORITY_COLS = ("depth", "host_rank_desc", "discovery_ts", "url_hash")
-
-
-def priority_cols(df: DataFrame) -> list:
-    return [
-        F.col("depth").asc(),
-        F.col("host_rank").desc(),
-        F.col("discovery_ts").asc(),
-        F.col("url_hash").asc(),
-    ]
-
-
 #: robots.txt grammar (RE2/Java-portable: explicit whitespace classes —
 #: NO ``\s`` (engines disagree on U+000B), no lookahead (RE2 has none),
 #: inline (?i) for the case-insensitive directive names)

@@ -1,10 +1,9 @@
-"""Sources & sinks: deterministic fixture generators and the snapshot
-catalog (Parquet + JSON-manifest emulation of Iceberg atomic commits).
+"""Sources & sinks: deterministic fixture generators, the snapshot
+catalog (Parquet + JSON-manifest emulation of Iceberg atomic commits) and
+the readers and writers for WARC, CDX and HTTP.
 
-Only the two names the crawl entry points need are re-exported; the
-readers and writers for WARC, CDX and HTTP live in their own submodules
-and are imported from there.
+The package re-exports nothing: import the submodule you need, e.g.
+``from xrpl_rich_list_py_crawler_spark.sources.catalog import SnapshotCatalog``.
+The crawl core uses ``catalog``; importing it must not load the
+synthetic-corpus generator in ``fixtures`` or the WARC/CDX/HTTP modules.
 """
-
-from .catalog import SnapshotCatalog  # noqa: F401
-from .fixtures import ensure_crawl_fixtures  # noqa: F401

@@ -8,14 +8,19 @@ directories plus a JSON manifest whose update is an atomic
 (``validator.py:184-185``, ``scraper.py:199,263``):
 
 * **append tables** (``results``, ``metrics``, ``seen``): one immutable
-  Parquet directory per round; readers union only *committed* rounds, so a
+  Parquet directory per round; readers scan only *committed* rounds, all
+  of a table's directories in one ``spark.read.parquet``, so a
   half-written round is invisible (Iceberg snapshot-isolation analog).
 * **state tables** (``frontier``): full snapshot per round; resume reads the
   last committed round (checkpoint/restart, SURVEY.md §4.2-5).
-* **commit**: write every table of the round under ``.tmp-r{N}`` dirs, then
-  rename dirs into place, then swap the manifest pointer last. A crash at
-  any earlier point leaves the previous manifest intact → the run resumes
-  from the previous round unchanged.
+* **commit** (and compaction, the same write path): stage every table
+  under ``<dir>.tmp``, rename each to a dirname no manifest entry names
+  (``r{N:05d}`` for a new round, the next ``r{N:05d}_g{k}`` for a
+  re-commit or a compaction), swap the manifest pointer, and only then
+  delete the dirs the swap superseded. A crash before the swap leaves the
+  previous manifest and every dir it names intact → the run resumes from
+  the previous round unchanged; a crash after it leaves only unlisted
+  dirs behind.
 """
 
 from __future__ import annotations
@@ -23,7 +28,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,59 +66,111 @@ class SnapshotCatalog:
     # -- paths -------------------------------------------------------------
 
     def _table_dir(self, table: str, round_n: int, m: dict | None = None) -> str:
-        """Physical dir for a (table, round). Compaction rewrites a round
-        under a new GENERATION dirname recorded in the manifest (Iceberg
-        data-file versioning analog), so the manifest swap stays the only
-        commit point; un-compacted rounds use the default ``r{N:05d}``."""
+        """Physical dir for a (table, round). A re-commit or a compaction
+        rewrites a round under a new GENERATION dirname recorded in the
+        manifest (Iceberg data-file versioning analog), so the manifest swap
+        stays the only commit point; other rounds use ``r{N:05d}``."""
         m = m if m is not None else self.manifest()
         dirs = m.get("tables", {}).get(table, {}).get("dirs", {})
         name = dirs.get(str(round_n), f"r{round_n:05d}")
         return os.path.join(self.root, table, name)
 
-    # -- commit ------------------------------------------------------------
+    def _fresh_name(self, m: dict, table: str, round_n: int) -> str:
+        """A dirname no manifest entry points to: ``r{N:05d}`` for a round
+        the table does not list, else the next generation
+        ``r{N:05d}_g{k}`` after the one the manifest names."""
+        base = f"r{round_n:05d}"
+        meta = m["tables"].get(table, {})
+        if round_n not in meta.get("rounds", []):
+            return base
+        cur = meta.get("dirs", {}).get(str(round_n), base)
+        gen = int(cur.rsplit("_g", 1)[1]) + 1 if "_g" in cur else 1
+        return f"{base}_g{gen}"
 
-    def commit_round(self, round_n: int, tables: dict[str, DataFrame]) -> None:
-        """Atomically publish one round's table set.
+    # -- write -------------------------------------------------------------
 
-        Data is fully written (tmp dirs) before any rename; the manifest
-        swap is the commit point. The tables are written one after another
-        from the calling thread: a round's tables share persisted frames,
-        and concurrent writer threads over one SparkContext recomputed
-        those frames twice and could deadlock the JVM.
+    def _publish(
+        self,
+        m: dict,
+        frames: dict[tuple[str, int], DataFrame],
+        merged: tuple[tuple[str, int], ...] = (),
+    ) -> None:
+        """The one write path, shared by commit and compaction.
+
+        Each ``(table, round)`` frame is staged under ``<name>.tmp`` and
+        renamed to a :meth:`_fresh_name`; then the manifest ``m`` (the
+        caller's edited copy) is swapped with each round listed under its
+        new dirname and the ``merged`` entries removed; only then are the
+        directories the swap superseded deleted. Nothing the current
+        manifest names is removed or renamed onto before the swap, so a
+        crash at any step leaves the previous snapshot whole.
+
+        The tables are written one after another from the calling thread:
+        a round's tables share persisted frames, and concurrent writer
+        threads over one SparkContext recomputed those frames twice and
+        could deadlock the JVM.
         """
-        finals = []
-        for name, df in tables.items():
-            final = self._table_dir(name, round_n)
+        staged = []
+        for (table, r), df in frames.items():
+            name = self._fresh_name(m, table, r)
+            final = os.path.join(self.root, table, name)
             tmp = final + ".tmp"
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
             os.makedirs(os.path.dirname(final), exist_ok=True)
             df.write.mode("overwrite").parquet(tmp)
-            finals.append((tmp, final))
-        for tmp, final in finals:
+            staged.append((table, r, name, tmp, final))
+        for _, _, _, tmp, final in staged:
             if os.path.exists(final):
+                # left by an attempt that died before its swap: no manifest
+                # entry names it, so it is uncommitted by construction, and
+                # os.rename onto a non-empty dir would raise (ADVICE r02)
                 shutil.rmtree(final)
             os.rename(tmp, final)
+        superseded = [self._table_dir(t, r, m) for t, r in merged]
+        for table, r, name, _, _ in staged:
+            meta = m["tables"].setdefault(table, {"rounds": []})
+            if r in meta["rounds"]:
+                superseded.append(self._table_dir(table, r, m))
+            else:
+                meta["rounds"] = sorted(meta["rounds"] + [r])
+            if name != f"r{r:05d}":
+                meta.setdefault("dirs", {})[str(r)] = name
+        for t, r in merged:
+            m["tables"][t]["rounds"].remove(r)
+            m["tables"][t].get("dirs", {}).pop(str(r), None)
+        self._swap_manifest(m)  # commit point
+        for p in superseded:
+            if os.path.exists(p):
+                shutil.rmtree(p)
+
+    def commit_round(self, round_n: int, tables: dict[str, DataFrame]) -> None:
+        """Atomically publish one round's table set. Re-committing a round
+        replaces its content: the new files land under a new generation
+        dirname and the old ones are deleted after the swap."""
         m = self.manifest()
         if round_n not in m["committed_rounds"]:
-            m["committed_rounds"].append(round_n)
-            m["committed_rounds"].sort()
-        for name in tables:
-            m["tables"].setdefault(name, {"rounds": []})
-            if round_n not in m["tables"][name]["rounds"]:
-                m["tables"][name]["rounds"].append(round_n)
-                m["tables"][name]["rounds"].sort()
-        self._swap_manifest(m)
+            m["committed_rounds"] = sorted(m["committed_rounds"] + [round_n])
+        self._publish(m, {(t, round_n): df for t, df in tables.items()})
 
     # -- read --------------------------------------------------------------
 
+    def _read(
+        self, spark: SparkSession, table: str, rounds: list[int],
+        m: dict | None = None,
+    ) -> DataFrame:
+        """The one read path: every round's directory in one scan, so the
+        schema is inferred by one Spark job, not one per round."""
+        m = m if m is not None else self.manifest()
+        return spark.read.parquet(*(self._table_dir(table, r, m) for r in rounds))
+
     def read_round(self, spark: SparkSession, table: str, round_n: int) -> DataFrame:
-        return spark.read.parquet(self._table_dir(table, round_n))
+        return self._read(spark, table, [round_n])
 
     def read_appended(
         self, spark: SparkSession, table: str, up_to_round: int | None = None
     ) -> DataFrame | None:
-        """Union of all committed round-increments of an append table.
+        """All committed round-increments of an append table.
 
         Only manifest-listed rounds are read — uncommitted/torn dirs are
         invisible (snapshot isolation).
@@ -141,9 +197,7 @@ class SnapshotCatalog:
             rounds = [r for r in rounds if r <= up_to_round]
         if not rounds:
             return None
-        paths = [self._table_dir(table, r, m) for r in rounds]
-        dfs = [spark.read.parquet(p) for p in paths]
-        return reduce(lambda a, b: a.unionByName(b), dfs)
+        return self._read(spark, table, rounds, m)
 
     def read_state(
         self, spark: SparkSession, table: str, round_n: int | None = None
@@ -156,7 +210,7 @@ class SnapshotCatalog:
         r = round_n if round_n is not None else max(rounds)
         if r not in rounds:
             return None
-        return self.read_round(spark, table, r)
+        return self._read(spark, table, [r], m)
 
     def row_count(self, table: str, round_n: int) -> int | None:
         """Row count from Parquet footers (pyarrow, driver-side, no Spark
@@ -198,23 +252,18 @@ class SnapshotCatalog:
         drop = rounds[:-keep_last]
         keep = rounds[-keep_last:]
         m["committed_rounds"] = keep
-        for t in m["tables"]:
+        doomed = []
+        for t, meta in m["tables"].items():
             if t in self.RETAIN_TABLES:
                 continue
-            m["tables"][t]["rounds"] = [
-                r for r in m["tables"][t]["rounds"] if r in keep
-            ]
-        self._swap_manifest(m)
-        for t, meta in list(m["tables"].items()):
-            if t in self.RETAIN_TABLES:
-                continue
-            dirs = meta.get("dirs", {})
+            doomed += [self._table_dir(t, r, m) for r in drop]
+            meta["rounds"] = [r for r in meta["rounds"] if r in keep]
             for r in drop:
-                rd = os.path.join(
-                    self.root, t, dirs.get(str(r), f"r{r:05d}")
-                )
-                if os.path.exists(rd):
-                    shutil.rmtree(rd)
+                meta.get("dirs", {}).pop(str(r), None)
+        self._swap_manifest(m)
+        for d in doomed:
+            if os.path.exists(d):
+                shutil.rmtree(d)
         return drop
 
     def compact_rounds(
@@ -229,10 +278,10 @@ class SnapshotCatalog:
 
         The crawl's ``seen`` ledger is retained forever (it is the dedup
         key), so its round count grows without bound — compaction is what
-        keeps ``read_appended`` from uniting thousands of tiny files. The
-        rewrite lands under a NEW generation dirname; the manifest swap is
-        the single commit point (a crash before it leaves the old manifest
-        + old dirs fully intact), and old dirs are deleted only after.
+        keeps ``read_appended`` from scanning thousands of tiny files. The
+        rewrite goes through the commit's write path (:meth:`_publish`):
+        it lands under a new generation dirname, the manifest swap is the
+        commit point, and the merged dirs are deleted only after it.
         Readers see the identical row multiset before and after.
         """
         m = self.manifest()
@@ -244,38 +293,10 @@ class SnapshotCatalog:
             rounds = [r for r in rounds if r <= up_to_round]
         if len(rounds) <= 1:
             return []
-        dest = rounds[-1]
-        dirs = meta.setdefault("dirs", {})
-        old_paths = [self._table_dir(table, r, m) for r in rounds]
-        cur_name = dirs.get(str(dest), f"r{dest:05d}")
-        gen = int(cur_name.rsplit("_g", 1)[1]) + 1 if "_g" in cur_name else 1
-        new_name = f"r{dest:05d}_g{gen}"
-        new_dir = os.path.join(self.root, table, new_name)
-        tmp = new_dir + ".tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        if os.path.exists(new_dir):
-            # crash window: a prior attempt renamed tmp -> new_dir but died
-            # before the manifest swap. The dir is by construction
-            # uncommitted (the manifest still points at the old name), so a
-            # retry must clear it or os.rename onto a non-empty dir raises
-            # and wedges compaction permanently (ADVICE r02).
-            shutil.rmtree(new_dir)
-        df = reduce(
-            lambda a, b: a.unionByName(b),
-            [spark.read.parquet(p) for p in old_paths],
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.rename(tmp, new_dir)
-        merged_away = rounds[:-1]
-        meta["rounds"] = [r for r in meta["rounds"] if r not in merged_away]
-        for r in merged_away:
-            dirs.pop(str(r), None)
-        dirs[str(dest)] = new_name
+        dest, merged_away = rounds[-1], rounds[:-1]
+        df = self._read(spark, table, rounds, m).coalesce(1)
         # as-of reads below dest can no longer separate the merged history
         meta["compacted_through"] = max(meta.get("compacted_through", 0), dest)
-        self._swap_manifest(m)  # commit point
-        for p in old_paths:
-            if os.path.exists(p):
-                shutil.rmtree(p)
+        merged = tuple((table, r) for r in merged_away)
+        self._publish(m, {(table, dest): df}, merged)
         return merged_away
