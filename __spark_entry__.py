@@ -536,7 +536,7 @@ def _q_significant_changes(spark, sf):
     # reference thresholds are (0.1%, 500k XRP) at post-alert.py:110; the
     # fixture's totals are ~1e4-1e5 XRP per label, so scale the amount
     # threshold to keep the operator non-trivial on fixture data
-    out = jobs.get_significant_changes(s, ch, 0.1, 1_000)
+    out = jobs.get_significant_changes(ch, 0.1, 1_000)
     return _dbl(out)
 
 
@@ -605,7 +605,7 @@ def _q_alert_lines(spark, sf):
 
     s = jobs.summary_series(_fix_shared(spark, "richlist"))
     ch = jobs.balance_changes(s)
-    sig = jobs.get_significant_changes(s, ch, 0.1, 1_000)
+    sig = jobs.get_significant_changes(ch, 0.1, 1_000)
     return _dbl(format_alert_lines(sig))
 
 

@@ -55,6 +55,28 @@ def test_resume_equals_uninterrupted(spark, crawl_sf0001, tmp_path):
     assert fa == fb
 
 
+def test_failed_commit_releases_round_caches(spark, crawl_sf0001, tmp_path,
+                                             monkeypatch):
+    """A round whose commit raises still unpersists every frame it cached,
+    so a retried round starts from the same executor memory."""
+    pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
+    robots = spark.read.parquet(os.path.join(crawl_sf0001, "robots.parquet"))
+    seeds = spark.read.parquet(os.path.join(crawl_sf0001, "seeds.parquet"))
+    cat = SnapshotCatalog(str(tmp_path))
+    run = CrawlRun(spark, cat, pages, robots, use_bloom=False)
+    run.run(1, seeds)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    def swap(m):
+        raise OSError("injected manifest swap failure")
+
+    monkeypatch.setattr(cat, "_swap_manifest", swap)
+    with pytest.raises(OSError, match="injected"):
+        run.run_round(2)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+    assert cat.last_round() == 1
+
+
 def test_fresh_run_without_seeds_raises(spark, tmp_path):
     cat = SnapshotCatalog(str(tmp_path))
     pages = spark.createDataFrame(
@@ -437,6 +459,10 @@ def test_commit_fault_matrix(spark, tmp_path, monkeypatch, op, fault):
     assert {t: v["rounds"] for t, v in m["tables"].items()} == {
         t: sorted(after) for t in ("results", "seen", "frontier")
     }
+    for t in ("results", "seen", "frontier"):
+        assert sorted(os.listdir(tmp_path / t)) == sorted(
+            os.path.basename(cat._table_dir(t, r, m)) for r in after
+        ), t
 
 
 @pytest.mark.parametrize("fault", ["rename0", "swap", "cleanup"])

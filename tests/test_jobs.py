@@ -102,7 +102,7 @@ def test_retention_windows(rich, summary):
 def test_significant_changes_topk(summary):
     """O3/P7: ≤5 rows, ordered by |pct| desc, all above thresholds."""
     ch = jobs.balance_changes(summary)
-    out = jobs.get_significant_changes(summary, ch, 0.05, 100).collect()
+    out = jobs.get_significant_changes(ch, 0.05, 100).collect()
     assert 0 < len(out) <= 5
     pcts = [abs(r["percentage_1h"]) for r in out]
     assert pcts == sorted(pcts, reverse=True)
@@ -144,6 +144,37 @@ def test_refresh_chain_analyze_runs_last(spark, rich, cats):
     }
     assert stats["summary"] == res.summary.count()
     assert all(n >= 0 for n in stats.values())
+
+
+def test_refresh_and_alert_on_empty_richlist(spark, rich, cats):
+    """An empty rich list runs the same plans as a full one: every table
+    comes back empty with the schema of a non-empty refresh, ANALYZE reads
+    0 rows everywhere, and the alert has no mover lines."""
+    from xrpl_rich_list_py_crawler_spark.plans import pipeline
+
+    full = pipeline.refresh_analytics(spark, rich, cats)
+    empty = pipeline.refresh_analytics(spark, rich.limit(0), cats)
+    tables = [
+        "summary", "balance_changes", "available_changes", "category_changes",
+        "country_changes", "category_statistics", "country_statistics",
+        "available_statistics",
+    ]
+
+    def schema(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    for name in tables:
+        got = getattr(empty, name)
+        assert schema(got) == schema(getattr(full, name)), name
+        assert got.count() == 0, name
+    stats = {r["table"]: r["rows"] for r in empty.table_stats.collect()}
+    assert stats == {name: 0 for name in tables}
+    full.summary.unpersist()
+    empty.summary.unpersist()
+
+    txt = pipeline.significant_changes_alert(
+        spark, rich.limit(0), 0.05, 100, 1767225600)
+    assert txt.splitlines() == ["XRPL rich-list movers (1h):", "t=1767225600"]
 
 
 def test_analyze_tables_empty_dict(spark):

@@ -1,7 +1,7 @@
 """Parser layer: byte-identical goldens + oracle agreement.
 
 Pins the input_hint invariant ("byte-identical extracted text per url"):
-pure-Python twin == Arrow UDF == pages.text golden column.
+pure-Python twin == JVM Column expression == pages.text golden column.
 """
 
 import os
@@ -15,9 +15,7 @@ from xrpl_rich_list_py_crawler_spark.functions import (
     canonical_label,
     canonicalize_url,
     canonicalize_url_udf,
-    extract_links_udf,
     extract_text,
-    extract_text_udf,
     format_label,
     parse_percentage,
     parse_xrp_amount,
@@ -39,56 +37,6 @@ def test_extract_text_byte_identical_ref(crawl_sf0001):
     pages = pd.read_parquet(os.path.join(crawl_sf0001, "pages.parquet"))
     for r in pages.itertuples(index=False):
         assert extract_text(bytes(r.html)) == r.text
-
-
-def test_extract_text_byte_identical_udf(spark, crawl_sf0001):
-    pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
-    mism = pages.withColumn("got", extract_text_udf("html")).filter(
-        F.col("got") != F.col("text")
-    )
-    assert mism.count() == 0
-
-
-def test_extract_links_udf_matches_ref(spark, crawl_sf0001):
-    pages = pd.read_parquet(os.path.join(crawl_sf0001, "pages.parquet")).head(200)
-    sdf = spark.createDataFrame(pages[["url", "html"]])
-    got = {
-        r["url"]: r["links"]
-        for r in sdf.withColumn("links", extract_links_udf("html")).collect()
-    }
-    for r in pages.itertuples(index=False):
-        assert got[r.url] == extract_links(bytes(r.html))
-
-
-def test_extract_page_udf_fused_equals_singles(spark, crawl_sf0001):
-    """The fused one-Arrow-pass extractor (run_round's hot path since r3)
-    must be byte-identical to the single-purpose UDFs AND evaluate its
-    Python UDF exactly once despite two struct-field references."""
-    from xrpl_rich_list_py_crawler_spark.functions import extract_page_udf
-
-    pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
-    fused = (
-        pages.withColumn("_ex", extract_page_udf("html"))
-        .select(
-            "url",
-            F.col("_ex.text").alias("ft"),
-            F.col("_ex.links").alias("fl"),
-        )
-    )
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert plan.count("extract_page_udf") == 1
-    singles = pages.select(
-        "url",
-        extract_text_udf("html").alias("st"),
-        extract_links_udf("html").alias("sl"),
-    )
-    mism = (
-        fused.join(singles, "url")
-        .filter((F.col("ft") != F.col("st")) | (F.col("fl") != F.col("sl")))
-        .count()
-    )
-    assert mism == 0
 
 
 def test_extract_links_col_jvm_matches_ref(spark, crawl_sf0001):

@@ -149,31 +149,6 @@ def test_trustline_rank_is_two_phase(spark, sf_dir):
     assert "_pid" in plan
 
 
-def test_round_parse_single_arrow_eval(spark, crawl_sf0001):
-    """Round-3 fusion: the crawl's extraction stage must ship the html blob
-    across JVM<->Python ONCE — exactly one ArrowEvalPython with one UDF in
-    the fused parse plan (two would mean the blob pays IPC twice)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from xrpl_rich_list_py_crawler_spark.functions.udfs import extract_page_udf
-
-    pages = spark.read.parquet(os.path.join(crawl_sf0001, "pages.parquet"))
-    parsed = (
-        pages.withColumn("_ex", F.when(F.col("html").isNotNull(),
-                                       extract_page_udf("html")))
-        .select(F.col("_ex.text").alias("text"),
-                F.size(F.coalesce(F.col("_ex.links"),
-                                  F.array().cast("array<string>"))).alias("n"))
-    )
-    # executedPlan string lists each node once (explain-formatted repeats
-    # nodes in the details section)
-    plan = parsed._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
-    assert plan.count("extract_page_udf") == 1
-
-
 def test_round_parse_fully_jvm(spark, crawl_sf0001):
     """r04: run_round's extraction is Python-FREE — text and links both
     harvest via regexp in whole-stage codegen; the html blob never

@@ -1,5 +1,5 @@
-"""Scalar function layer: pure-Python reference twins + Arrow UDFs +
-JVM-side Column expressions (preferred in hot paths)."""
+"""Scalar function layer: pure-Python reference twins, Arrow UDFs where a
+parser has no JVM form, and JVM-side Column expressions (the hot paths)."""
 
 from .parsers_ref import (  # noqa: F401
     canonical_label,
@@ -16,14 +16,10 @@ from .udfs import (  # noqa: F401
     canonicalize_url_udf,
     canonicalize_urls_split,
     extract_links_col,
-    extract_links_udf,
-    extract_page_udf,
     extract_text_col,
-    extract_text_udf,
     format_label_col,
     host_col,
     parse_percentage_udf,
     parse_xrp_amount_udf,
     safe_ratio_col,
-    url_host_udf,
 )

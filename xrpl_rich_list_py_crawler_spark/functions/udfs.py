@@ -12,21 +12,9 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StringType
 
-from .parsers_ref import (
-    LABEL_CASE_BRANCHES,
-    _LINK_RE,
-    _PARA_RE,
-    _TITLE_RE,
-    canonicalize_url,
-)
+from .parsers_ref import LABEL_CASE_BRANCHES, canonicalize_url
 
 # ---------------------------------------------------------------------------
 # URL canonicalization + host (engine analog of function.sql:17-50)
@@ -95,17 +83,6 @@ def canonicalize_urls_split(
     return fast_df.unionByName(slow_df)
 
 
-@pandas_udf(StringType())
-def url_host_udf(urls: pd.Series) -> pd.Series:
-    """Arrow-batched host extraction (lowercased, port-stripped)."""
-    return (
-        urls.str.extract(r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]+)", expand=False)
-        .str.replace(r":\d+$", "", regex=True)
-        .str.lower()
-        .fillna("")
-    )
-
-
 def host_col(url: Column) -> Column:
     """JVM-side host extraction for *canonical* urls (already lowercase,
     no default port): stays in whole-stage codegen — preferred in the
@@ -122,34 +99,6 @@ def host_col(url: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _extract_text_one(html: bytes) -> str:
-    parts = []
-    m = _TITLE_RE.search(html)
-    if m:
-        parts.append(m.group(1))
-    parts.extend(_PARA_RE.findall(html))
-    return b"\n".join(parts).decode("utf-8", errors="replace")
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Byte-identical golden extraction: title + <p> blocks joined by \\n.
-
-    Pinned against parsers_ref.extract_text and the pages.text column by
-    tests/test_parsers.py goldens.
-    """
-    return html.map(_extract_text_one, na_action="ignore")
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    """All <a href> targets per page, document order, raw."""
-    return html.map(
-        lambda b: [m.decode("utf-8", errors="replace") for m in _LINK_RE.findall(b)],
-        na_action="ignore",
-    )
-
-
 #: the link regex as a Java-regex string — semantically identical to
 #: parsers_ref._LINK_RE: `\s` is [ \t\n\x0B\f\r] in BOTH Java and Python
 #: bytes-mode, and the pattern contains no `.`, so DOTALL is irrelevant.
@@ -162,7 +111,7 @@ PARA_PATTERN = r"(?s)<p>(.*?)</p>"
 
 def extract_text_col(html: Column) -> Column:
     """JVM-side text extraction (whole-stage codegen, zero Python) —
-    byte-identical to parsers_ref.extract_text / extract_text_udf.
+    byte-identical to parsers_ref.extract_text.
 
     Same decode route as :func:`extract_links_col` (cast +
     ``make_valid_utf8``), same self-synchronization argument: the
@@ -177,9 +126,6 @@ def extract_text_col(html: Column) -> Column:
     with an EMPTY title (one '' part, so the joined text leads with a
     newline) from a page with none (no part): ``regexp_extract`` alone
     returns '' for both and would merge them.
-
-    With this, the whole crawl round is Python-free; the Arrow UDFs
-    remain exported for callers that want the pandas path.
     """
     # NOTE (r06): the duplicated ``s`` below is fine — this expression
     # lives in a PROJECT, where whole-stage codegen's subexpression
@@ -208,48 +154,10 @@ def extract_links_col(html: Column) -> Column:
     are ASCII and UTF-8 is self-synchronizing, match boundaries are
     byte-identical to parsers_ref.extract_links for ANY input — including
     invalid bytes inside an href (pinned in tests/test_parsers.py).
-
-    This is the r04 corpus-parse lever: link harvesting leaves the Arrow
-    channel entirely; only text extraction still crosses to Python.
     """
     return F.regexp_extract_all(
         F.make_valid_utf8(html.cast("string")), F.lit(LINK_HREF_PATTERN), 1
     )
-
-
-# explicit StructType: a DDL return-type string would be parsed at import
-# time and require an active SparkContext (Spark 4.1 gotcha)
-_PAGE_STRUCT = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("links", ArrayType(StringType())),
-    ]
-)
-
-
-@pandas_udf(_PAGE_STRUCT)
-def extract_page_udf(html: pd.Series) -> pd.DataFrame:
-    """Fused text + link extraction in ONE Arrow pass.
-
-    The html blob is ~99% of a page row's bytes; calling
-    ``extract_text_udf`` and ``extract_links_udf`` separately ships it
-    across the JVM↔Python Arrow channel twice. This struct-returning UDF
-    pays the transfer once and runs both regex walks on the bytes while
-    they're hot. Field outputs are byte-identical to the single-purpose
-    UDFs (pinned in tests/test_parsers.py), which remain for callers that
-    need only one side.
-    """
-    texts, links = [], []
-    for b in html:
-        if b is None:
-            texts.append(None)
-            links.append(None)
-            continue
-        texts.append(_extract_text_one(b))
-        links.append(
-            [m.decode("utf-8", errors="replace") for m in _LINK_RE.findall(b)]
-        )
-    return pd.DataFrame({"text": texts, "links": links})
 
 
 # ---------------------------------------------------------------------------

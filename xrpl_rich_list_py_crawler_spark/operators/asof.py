@@ -1,17 +1,16 @@
-"""As-of and banded as-of joins (J5/J6) as window-rank compositions.
+"""Latest row per key (J8) as a window rank.
 
-Spark has no native AS OF join; the reference does it with correlated
-scalar subqueries per horizon (``function.sql:167-205``) and a jitter band
-for the 1-hour horizon (``function.sql:156-165``: accept the latest snapshot
-in ``(t-70min, t-45min]``). The idiomatic Spark rewrite (SURVEY.md §4.2-4):
-filter candidates to the lookback predicate → ``row_number()`` over
-``Window.partitionBy(keys).orderBy(desc(ts))`` → keep rank 1. The filter
-prunes partitions/row-groups before the single shuffle-by-key.
+The reference picks each key's latest row with a correlated
+``ORDER BY … DESC LIMIT 1`` (``function.sql:10-15``). The idiomatic Spark
+rewrite (SURVEY.md §4.2-4) is ``row_number()`` over
+``Window.partitionBy(keys).orderBy(desc(ts))``, keeping rank 1. The as-of
+lookups J5/J6 (``function.sql:156-205``) resolve global timestamps, so they
+are two one-row aggregates in ``plans.jobs._lookback_targets`` instead.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -24,24 +23,3 @@ def latest_per_key(df: DataFrame, keys: list[str], ts_col: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def asof_lookup(
-    df: DataFrame, keys: list[str], ts_col: str, cutoff: Column
-) -> DataFrame:
-    """Per key, the latest row with ``ts <= cutoff`` (J5,
-    ``function.sql:167-205``)."""
-    return latest_per_key(df.filter(F.col(ts_col) <= cutoff), keys, ts_col)
-
-
-def banded_asof_lookup(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    lo_exclusive: Column,
-    hi_inclusive: Column,
-) -> DataFrame:
-    """Per key, the latest row in the band ``(lo, hi]`` (J6,
-    ``function.sql:160-165``) — late/jittered-snapshot tolerance."""
-    band = (F.col(ts_col) > lo_exclusive) & (F.col(ts_col) <= hi_inclusive)
-    return latest_per_key(df.filter(band), keys, ts_col)

@@ -171,12 +171,12 @@ def build_bloom_shards(
 
 
 def anti_join_seen(candidates: DataFrame, seen: DataFrame | None) -> DataFrame:
-    """Exact frontier-vs-seen anti-join (J2, ``loader.py:157-161``)."""
+    """Exact frontier-vs-seen anti-join (J2, ``loader.py:157-161``). A
+    left-anti join ignores duplicate keys on the right, so the ledger is
+    not deduplicated first (that would shuffle all of it every round)."""
     if seen is None:
         return candidates
-    return candidates.join(
-        seen.select("url_hash").distinct(), "url_hash", "left_anti"
-    )
+    return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
 
 
 def anti_join_seen_bloom(

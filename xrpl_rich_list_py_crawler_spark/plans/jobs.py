@@ -46,32 +46,11 @@ def _dec(col: str):
 # ---------------------------------------------------------------------------
 
 
-def rich_list_summary(richlist: DataFrame) -> DataFrame:
-    """Canonicalized-label aggregate of the LATEST snapshot (A2 + F5 + P5).
-
-    ≅ ``update_rich_list_summary`` (``function.sql:2-94``): latest-snapshot
-    scalar subquery → 29-branch CASE grouping → COUNT/SUM×3.
-    """
-    latest = richlist.agg(F.max("snapshot_date").alias("ts"))
-    return (
-        richlist.join(
-            F.broadcast(latest), richlist["snapshot_date"] == latest["ts"]
-        )
-        .groupBy(canonical_label_col(F.col("label")).alias("grouped_label"))
-        .agg(
-            F.count("*").alias("count"),
-            F.sum(_dec("balance_xrp")).alias("total_balance"),
-            F.sum(_dec("escrow_xrp")).alias("total_escrow"),
-            F.sum(_dec("balance_xrp") + _dec("escrow_xrp")).alias("total_xrp"),
-            F.max("snapshot_date").alias("created_at"),
-        )
-    )
-
-
 def summary_series(richlist: DataFrame) -> DataFrame:
     """The full hourly summary history (what 48 cron invocations of
-    ``update_rich_list_summary`` accumulate): same aggregate, grouped by
-    snapshot too. One shuffle; partial aggregation is automatic."""
+    ``update_rich_list_summary`` accumulate): the canonicalized-label
+    aggregate (A2 + F5 + P5) grouped by snapshot too. One shuffle; partial
+    aggregation is automatic."""
     return (
         richlist.groupBy(
             canonical_label_col(F.col("label")).alias("grouped_label"),
@@ -87,6 +66,18 @@ def summary_series(richlist: DataFrame) -> DataFrame:
             "grouped_label", "count", "total_balance", "total_escrow",
             "total_xrp", "created_at",
         )
+    )
+
+
+def rich_list_summary(richlist: DataFrame) -> DataFrame:
+    """≅ ``update_rich_list_summary`` (``function.sql:2-94``): latest-snapshot
+    scalar subquery → 29-branch CASE grouping → COUNT/SUM×3, i.e.
+    :func:`summary_series` over the latest snapshot only."""
+    latest = richlist.agg(F.max("snapshot_date").alias("_ts"))
+    return summary_series(
+        richlist.join(
+            F.broadcast(latest), richlist["snapshot_date"] == latest["_ts"]
+        ).drop("_ts")
     )
 
 
@@ -137,11 +128,14 @@ def _horizon_changes(rows: DataFrame, key, agg, cols: list[str], cur: str,
     each horizon's target. Keys without a row at ``latest`` drop out. Five
     (hours, prev_raw) structs then explode each key into its horizon rows,
     which diff current ``cur`` against prev_raw with COALESCE-to-current
-    for missing history (F9) and the div-by-zero guard (F8).
+    for missing history (F9) and the div-by-zero guard (F8). An empty
+    summary (``latest`` None) matches no row, so the table comes back empty
+    with the schema of a full one.
     """
     ts = F.col("created_at")
-    now = ts == F.lit(latest)
-    stamps = [latest, *{t for t in targets.values() if t is not None}]
+    at = F.lit(latest).cast("timestamp")
+    now = ts == at
+    stamps = [at, *{t for t in targets.values() if t is not None}]
     wide = (
         rows.filter(ts.isin(*stamps))
         .groupBy(key.alias("grouped_label"))
@@ -169,7 +163,7 @@ def _horizon_changes(rows: DataFrame, key, agg, cols: list[str], cur: str,
         *cols,
         (F.col(cur) - prev).alias("balance_change"),
         F.round(safe_ratio_col(curd, prevd), 6).alias("percentage_change"),
-        F.lit(latest).alias("calculated_at"),
+        at.alias("calculated_at"),
     )
 
 
@@ -178,12 +172,6 @@ def _changes(summary: DataFrame, value_col: str,
     """Balance/available changes per label: :func:`_horizon_changes` with a
     conditional max, as a label has one summary row per timestamp."""
     latest, targets = lookback or _lookback_targets(summary)
-    if latest is None:
-        return summary.sparkSession.createDataFrame(
-            [],
-            "grouped_label string, hours int, balance_change double, "
-            "percentage_change double, calculated_at timestamp",
-        )
     return _horizon_changes(
         summary, F.col("grouped_label"), F.max, [value_col], value_col,
         latest, targets,
@@ -224,13 +212,6 @@ def _dim_changes(summary: DataFrame, categories: DataFrame, dim: str,
     and coalesces to current.
     """
     latest, targets = lookback or _lookback_targets(summary)
-    if latest is None:
-        return summary.sparkSession.createDataFrame(
-            [],
-            "grouped_label string, hours int, count long, total_balance double, "
-            "total_escrow double, total_xrp double, balance_change double, "
-            "percentage_change double, calculated_at timestamp",
-        )
     return _horizon_changes(
         summary.join(F.broadcast(categories), "grouped_label"),
         F.col(dim), F.sum,
@@ -268,11 +249,8 @@ def _dim_statistics(summary: DataFrame, categories: DataFrame, now,
     ``update_country_statistics`` (``function.sql:1002-1032``): the last 3
     days of the summary, bucketed by hour and rolled up to ``dim`` through
     the (broadcast) categories dim."""
-    s3 = summary.filter(
-        F.col("created_at") >= F.lit(now) - F.expr("INTERVAL 3 DAYS")
-    )
     return (
-        _hourly(s3)
+        _hourly(delete_old_statistics(summary, now))
         .join(F.broadcast(categories), "grouped_label")
         .groupBy(F.col(dim).alias("grouped_label"), "created_at")
         .agg(
@@ -301,11 +279,8 @@ def available_statistics(summary: DataFrame, now) -> DataFrame:
     per-label hourly rows with ``total_xrp := total_balance`` (escrow-free),
     GROUP BY all projected columns = dedup-by-grouping (A6,
     ``function.sql:1050-1053``)."""
-    s3 = summary.filter(
-        F.col("created_at") >= F.lit(now) - F.expr("INTERVAL 3 DAYS")
-    )
     return (
-        _hourly(s3)
+        _hourly(delete_old_statistics(summary, now))
         .select(
             "grouped_label", "count", "total_balance", "total_escrow",
             F.col("total_balance").alias("total_xrp"), "created_at",
@@ -327,14 +302,18 @@ def cleanup_old_rich_list_data(richlist: DataFrame, now) -> DataFrame:
     snapshots older than 2 days. Spark deletes by filtered overwrite /
     partition drop (the catalog's expire_rounds does the physical part)."""
     return richlist.filter(
-        F.col("snapshot_date") >= F.lit(now) - F.expr("INTERVAL 2 DAYS")
+        F.col("snapshot_date")
+        >= F.lit(now).cast("timestamp") - F.expr("INTERVAL 2 DAYS")
     )
 
 
-def delete_old_statistics(hourly: DataFrame, now) -> DataFrame:
-    """≅ ``delete_old_statistics`` (``function.sql:951-966``): 3-day window."""
-    return hourly.filter(
-        F.col("created_at") >= F.lit(now) - F.expr("INTERVAL 3 DAYS")
+def delete_old_statistics(summary: DataFrame, now) -> DataFrame:
+    """≅ ``delete_old_statistics`` (``function.sql:951-966``): the 3-day
+    window every hourly statistics table keeps. ``now`` None (an empty
+    summary) keeps nothing."""
+    return summary.filter(
+        F.col("created_at")
+        >= F.lit(now).cast("timestamp") - F.expr("INTERVAL 3 DAYS")
     )
 
 
@@ -343,35 +322,37 @@ def delete_old_statistics(hourly: DataFrame, now) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def summary_with_changes(summary: DataFrame, changes: DataFrame) -> DataFrame:
-    """≅ view ``xrpl_rich_list_summary_with_changes`` (``table.sql:254-293``)
-    — J7 done idiomatically: ONE groupBy().pivot(hours) instead of five
-    self-left-joins (one shuffle instead of five)."""
-    latest = summary.agg(F.max("created_at").alias("ts"))
-    cur = summary.join(F.broadcast(latest), summary["created_at"] == latest["ts"]).drop("ts")
+def _pivot_horizons(changes: DataFrame, *keys: str) -> DataFrame:
+    """J7 done idiomatically: the change rows per ``keys`` pivoted wide to
+    ``change_{h}h`` / ``percentage_{h}h`` column pairs — ONE
+    groupBy().pivot(hours) instead of the reference's five self-left-joins
+    (one shuffle instead of five)."""
     wide = (
-        changes.groupBy("grouped_label")
+        changes.groupBy(*keys)
         .pivot("hours", HORIZONS)
         .agg(
             F.first("balance_change").alias("change"),
             F.first("percentage_change").alias("percentage"),
         )
     )
-    renames = {}
-    for h in HORIZONS:
-        renames[f"{h}_change"] = f"change_{h}h"
-        renames[f"{h}_percentage"] = f"percentage_{h}h"
-    for old, new in renames.items():
-        wide = wide.withColumnRenamed(old, new)
-    return cur.join(wide, "grouped_label", "left")
+    return wide.withColumnsRenamed({
+        f"{h}_{m}": f"{m}_{h}h" for h in HORIZONS for m in ("change", "percentage")
+    })
+
+
+def summary_with_changes(summary: DataFrame, changes: DataFrame) -> DataFrame:
+    """≅ view ``xrpl_rich_list_summary_with_changes`` (``table.sql:254-293``):
+    the latest summary rows with their horizons pivoted wide."""
+    latest = summary.agg(F.max("created_at").alias("ts"))
+    cur = summary.join(F.broadcast(latest), summary["created_at"] == latest["ts"]).drop("ts")
+    return cur.join(_pivot_horizons(changes, "grouped_label"), "grouped_label", "left")
 
 
 def dim_summary_with_changes(changes: DataFrame, dim: str) -> DataFrame:
     """≅ views ``xrpl_rich_list_category_summary_with_changes`` /
     ``…country_summary_with_changes`` (``table.sql:392-449, 452-511``):
     latest ``calculated_at`` per dimension value (J8 latest-per-key +
-    join-back), horizons pivoted wide (ONE groupBy().pivot() instead of the
-    reference's five self-left-joins), presentation decorations, and a
+    join-back), horizons pivoted wide, presentation decorations, and a
     ROW_NUMBER id by descending total_xrp.
 
     The id window is a global window over the already-aggregated dimension
@@ -386,20 +367,10 @@ def dim_summary_with_changes(changes: DataFrame, dim: str) -> DataFrame:
     latest = changes.join(
         F.broadcast(latest_keys), ["grouped_label", "calculated_at"]
     )
-    wide = (
-        latest.groupBy(
-            "grouped_label", "count", "total_balance", "total_escrow",
-            "total_xrp", "calculated_at",
-        )
-        .pivot("hours", HORIZONS)
-        .agg(
-            F.first("balance_change").alias("change"),
-            F.first("percentage_change").alias("percentage"),
-        )
+    wide = _pivot_horizons(
+        latest, "grouped_label", "count", "total_balance", "total_escrow",
+        "total_xrp", "calculated_at",
     )
-    for h in HORIZONS:
-        wide = wide.withColumnRenamed(f"{h}_change", f"change_{h}h")
-        wide = wide.withColumnRenamed(f"{h}_percentage", f"percentage_{h}h")
     ent_cat = F.col("grouped_label") if dim == "category" else F.lit("-")
     ent_cty = F.col("grouped_label") if dim == "country" else F.lit("-")
     decorated = wide.select(
@@ -417,22 +388,24 @@ def dim_summary_with_changes(changes: DataFrame, dim: str) -> DataFrame:
 
 
 def get_significant_changes(
-    summary: DataFrame,
     changes: DataFrame,
     percentage_threshold: float,
     amount_threshold: float,
 ) -> DataFrame:
-    """≅ ``get_significant_changes`` (``function.sql:1084-1106``): threshold
-    + ABS predicates (P7) → top-5 by |percentage_1h| (O3,
-    TakeOrderedAndProject)."""
-    wide = summary_with_changes(summary, changes)
+    """≅ ``get_significant_changes`` (``function.sql:1084-1106``): the
+    1-hour rows of :func:`balance_changes` past both ABS thresholds (P7)
+    → top-5 by |percentage_1h| (O3, TakeOrderedAndProject)."""
     return (
-        wide.filter(
-            F.col("change_1h").isNotNull()
-            & (F.abs(F.col("percentage_1h")) >= percentage_threshold)
-            & (F.abs(F.col("change_1h")) >= amount_threshold)
+        changes.filter(
+            (F.col("hours") == 1)
+            & (F.abs(F.col("percentage_change")) >= percentage_threshold)
+            & (F.abs(F.col("balance_change")) >= amount_threshold)
         )
-        .select("grouped_label", "change_1h", "percentage_1h")
+        .select(
+            "grouped_label",
+            F.col("balance_change").alias("change_1h"),
+            F.col("percentage_change").alias("percentage_1h"),
+        )
         .orderBy(F.abs(F.col("percentage_1h")).desc())
         .limit(5)
     )

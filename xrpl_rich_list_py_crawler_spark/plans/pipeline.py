@@ -129,13 +129,12 @@ def significant_changes_alert(
     ≅ ``post-alert.py:107-114`` → ``get_significant_changes`` → tweet."""
     from ..functions.presentation import alert_text
 
-    # persisted: the changes and their join back to the latest summary
-    # both read it, and the lookback resolution runs two jobs over it
+    # persisted: the lookback resolution runs two jobs over it before the
+    # changes read it a third time
     summary = jobs.summary_series(richlist).persist()
     try:
-        changes = jobs.balance_changes(summary)
-        top = jobs.get_significant_changes(summary, changes, pct_threshold,
-                                           amt_threshold)
+        top = jobs.get_significant_changes(
+            jobs.balance_changes(summary), pct_threshold, amt_threshold)
         return alert_text(top, as_of_unix)
     finally:
         summary.unpersist()

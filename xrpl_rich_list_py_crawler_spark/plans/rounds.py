@@ -262,6 +262,18 @@ class CrawlRun:
     def run_round(self, round_n: int) -> dict[str, DataFrame]:
         """Execute round ``round_n`` (≥1) and atomically commit
         results/metrics/seen-increment/next-frontier."""
+        cached: list[DataFrame] = []
+        try:
+            return self._round(round_n, cached)
+        finally:
+            # also when the commit raises: a failed round must not leave
+            # its frames pinned in executor memory for the retry
+            for df in cached:
+                df.unpersist()
+
+    def _round(self, round_n: int, cached: list[DataFrame]) -> dict[str, DataFrame]:
+        """The body of :meth:`run_round`; every frame it persists goes on
+        ``cached``."""
         prev = round_n - 1
         frontier = self._frontier(prev)
         seen = self._seen(prev)
@@ -279,6 +291,7 @@ class CrawlRun:
                 wildcard=self.wildcard_robots,
             )
         ).persist()
+        cached.append(gated)
         denied = gated.filter(F.col("robots_denied"))
         selected = gated.filter(~F.col("robots_denied") & F.col("selected"))
         deferred = gated.filter(~F.col("robots_denied") & ~F.col("selected"))
@@ -325,16 +338,16 @@ class CrawlRun:
             .drop("html", "canon_url")
         )
         parsed = parsed.persist()
+        cached.append(parsed)
 
         # 5. ranked results (two-phase distributed rank, no global window)
-        _caches: list = []
         results = global_rank(
             parsed.select(
                 "url", "url_hash", "host", "depth", "host_rank",
                 "discovery_ts", "fetch_delay_s", "text", "n_links", "fetch_ok",
             ),
             rank_col="rank",
-            cache_registry=_caches,
+            cache_registry=cached,
         ).select(
             F.lit(round_n).alias("round"),
             "rank", "url", "url_hash", "host", "depth", "host_rank",
@@ -352,6 +365,7 @@ class CrawlRun:
             .distinct()
             .select("url_hash", F.lit(round_n).alias("round"))
         ).persist()
+        cached.append(new_seen)
 
         # 7. link discovery → candidate frontier rows. Canonicalization
         # via the split-union JVM fast path: the already-canonical link
@@ -402,6 +416,7 @@ class CrawlRun:
             F.first("host").alias("host"),
             F.first("host_rank").alias("host_rank"),
         ).persist()
+        cached.append(merged)
         seen_now = (seen.select("url_hash") if seen is not None else
                     self.spark.createDataFrame([], "url_hash long")).unionByName(
             new_seen.select("url_hash")
@@ -427,6 +442,7 @@ class CrawlRun:
             "url", "url_hash", "host", "depth", "host_rank", "discovery_ts",
             F.lit(round_n).alias("round"),
         ).persist()
+        cached.append(next_frontier)
 
         # 9. per-host metrics (A7: lineage-stamped counters) — ONE shuffle:
         # tag every event with its metric name, conditional-sum per host
@@ -507,13 +523,6 @@ class CrawlRun:
                 # commit succeeded → advance the in-memory bloom to this round
                 self._bloom = bloom.or_merge(inc_shards)
                 self._bloom_round = round_n
-        gated.unpersist()
-        parsed.unpersist()
-        next_frontier.unpersist()
-        merged.unpersist()
-        new_seen.unpersist()
-        for c in _caches:
-            c.unpersist()
         return out
 
     def run(

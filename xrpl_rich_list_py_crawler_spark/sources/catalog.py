@@ -20,7 +20,8 @@ directories plus a JSON manifest whose update is an atomic
   delete the dirs the swap superseded. A crash before the swap leaves the
   previous manifest and every dir it names intact → the run resumes from
   the previous round unchanged; a crash after it leaves only unlisted
-  dirs behind.
+  dirs behind, and every publish starts by deleting the unlisted dirs of
+  the tables it writes.
 """
 
 from __future__ import annotations
@@ -97,35 +98,39 @@ class SnapshotCatalog:
     ) -> None:
         """The one write path, shared by commit and compaction.
 
-        Each ``(table, round)`` frame is staged under ``<name>.tmp`` and
-        renamed to a :meth:`_fresh_name`; then the manifest ``m`` (the
-        caller's edited copy) is swapped with each round listed under its
-        new dirname and the ``merged`` entries removed; only then are the
-        directories the swap superseded deleted. Nothing the current
-        manifest names is removed or renamed onto before the swap, so a
-        crash at any step leaves the previous snapshot whole.
+        Each table written is first cleared of every dir ``m`` does not
+        name. Each ``(table, round)`` frame is then staged under
+        ``<name>.tmp`` and renamed to a :meth:`_fresh_name`; then the
+        manifest ``m`` (the caller's edited copy) is swapped with each round
+        listed under its new dirname and the ``merged`` entries removed;
+        only then are the directories the swap superseded deleted. Nothing
+        the current manifest names is removed or renamed onto before the
+        swap, so a crash at any step leaves the previous snapshot whole.
 
         The tables are written one after another from the calling thread:
         a round's tables share persisted frames, and concurrent writer
         threads over one SparkContext recomputed those frames twice and
         could deadlock the JVM.
         """
+        # no dir the manifest does not name is committed: the staged and
+        # renamed dirs of attempts that died before their swap, and dirs a
+        # swap superseded whose delete failed. Clearing them here reclaims
+        # them, and os.rename never lands on a non-empty dir (ADVICE r02).
+        for table in {t for t, _ in frames}:
+            d = os.path.join(self.root, table)
+            os.makedirs(d, exist_ok=True)
+            named = {os.path.basename(self._table_dir(table, r, m))
+                     for r in m["tables"].get(table, {}).get("rounds", [])}
+            for entry in set(os.listdir(d)) - named:
+                shutil.rmtree(os.path.join(d, entry))
         staged = []
         for (table, r), df in frames.items():
             name = self._fresh_name(m, table, r)
             final = os.path.join(self.root, table, name)
             tmp = final + ".tmp"
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            os.makedirs(os.path.dirname(final), exist_ok=True)
             df.write.mode("overwrite").parquet(tmp)
             staged.append((table, r, name, tmp, final))
         for _, _, _, tmp, final in staged:
-            if os.path.exists(final):
-                # left by an attempt that died before its swap: no manifest
-                # entry names it, so it is uncommitted by construction, and
-                # os.rename onto a non-empty dir would raise (ADVICE r02)
-                shutil.rmtree(final)
             os.rename(tmp, final)
         superseded = [self._table_dir(t, r, m) for t, r in merged]
         for table, r, name, _, _ in staged:
